@@ -197,9 +197,9 @@ def opt04_datacenter_mip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Distributed bulk solve: one LP per nation (min x+y s.t. x+2y ≥ "
         "customer_count; optimum y=count/2, x=0, duals 0.5/0.0 — analytically "
-        "checkable), models defined relationally and solved via "
-        "groupBy(model_name).applyInPandas. The 100-TB path: model build is a "
-        "DataFrame pipeline, solves fan out per group."
+        "checkable), models defined relationally and solved one pandas task "
+        "per hash bucket of model_name (repartition + mapInPandas). The 100-TB "
+        "path: model build is a DataFrame pipeline, solves fan out per bucket."
     ),
 )
 def opt05_solve_many_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,7 +322,7 @@ def opt06_example_usage_relational(spark: SparkSession, sf_dir: str) -> DataFram
         "Parametric LP sweep (sensitivity analysis as a bulk workload): "
         "min x+y s.t. x+2y >= 7+delta, 3x+y >= 9, x,y >= 0 solved for a "
         "grid of RHS perturbations through the distributed bulk path — one "
-        "model per grid point, fanned out via groupBy(model).applyInPandas. "
+        "model per grid point, fanned out by hash bucket of the model name. "
         "Both constraints stay binding on delta in [0,4], so the optimum "
         "is the closed form x=(11-delta)/5, y=(3(7+delta)-9)/5, objective "
         "(23+2*delta)/5 — the oracle is that algebra, making the sweep an "

@@ -11,8 +11,8 @@ Replicates the 6 SQL functions of the reference DuckDB extension
   the 6 API functions with the reference's exact output schemas and
   error-as-status-row contract.
 - :mod:`highs_duckdb_spark.optim.bulk` — the Spark-idiomatic bulk path:
-  models as DataFrames, many models solved in parallel via
-  ``groupBy("model_name").applyInPandas``.
+  models as DataFrames, many models solved in parallel, one pandas task
+  per hash bucket of ``model_name`` (``repartition`` + ``mapInPandas``).
 """
 
 from highs_duckdb_spark.optim.registry import (

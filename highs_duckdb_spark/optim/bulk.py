@@ -4,10 +4,11 @@ The reference's own examples define models *relationally* (three tables:
 variables / constraints / coefficients — reference: example_usage.sql:19-36,
 test/sql/highs.test:31-51). This module accepts exactly that encoding as
 DataFrames and solves **many independent models in parallel**: rows shuffle
-once on ``model_name``, and each model is assembled + solved inside a
-grouped-map pandas UDF on an executor. Model construction is distributed;
-per-model solve is a single Arrow-batched task. This is how thousands of
-per-key LP/MIPs (one per customer/region/scenario) run on a cluster.
+once on ``model_name`` into one partition per core, and each partition's
+models are assembled + solved inside a pandas UDF on an executor. Model
+construction is distributed; each model's solve runs inside one task. This
+is how thousands of per-key LP/MIPs (one per customer/region/scenario) run
+on a cluster.
 
 Schemas (matching FIXTURES.md §A):
 
@@ -23,7 +24,7 @@ explicit integer ``ord`` column is provided on variables/constraints.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -112,50 +113,59 @@ def _solve_one_model(pdf: pd.DataFrame) -> pd.DataFrame:
     vrows = vrows.sort_values(
         ["ord", "name"] if vrows["ord"].notna().all() else ["name"], kind="mergesort"
     )
-    for _, r in vrows.iterrows():
-        if r["name"] in info.variable_indices:
+    for name, obj, lb, ub, vtype in zip(
+        vrows["name"].tolist(),
+        vrows["obj"].tolist(),
+        vrows["lower_bound"].tolist(),
+        vrows["upper_bound"].tolist(),
+        vrows["vtype"].tolist(),
+    ):
+        if name in info.variable_indices:
             # registry-path parity: duplicate names are an ERROR row, not a
             # silently malformed LP (reference: src/highs_extension.cpp:177-182)
             return _error_row(
                 model_name,
-                f"Variable '{r['name']}' already exists in model '{model_name}'",
+                f"Variable '{name}' already exists in model '{model_name}'",
             )
         idx = info.next_var_index
         info.next_var_index += 1
-        info.variable_indices[r["name"]] = idx
-        info.variable_names.append(r["name"])
-        info.obj_coefficients.append(float(r["obj"]))
-        info.var_lower_bounds.append(float(r["lower_bound"]))
-        info.var_upper_bounds.append(float(r["upper_bound"]))
-        info.variable_types.append(r["vtype"])
+        info.variable_indices[name] = idx
+        info.variable_names.append(name)
+        info.obj_coefficients.append(float(obj))
+        info.var_lower_bounds.append(float(lb))
+        info.var_upper_bounds.append(float(ub))
+        info.variable_types.append(vtype)
     crows = pdf[pdf["kind"] == _KIND_CON]
     crows = crows.sort_values(
         ["ord", "name"] if crows["ord"].notna().all() else ["name"], kind="mergesort"
     )
-    for _, r in crows.iterrows():
-        if r["name"] in info.constraint_indices:
+    for name, lb, ub in zip(
+        crows["name"].tolist(), crows["lower_bound"].tolist(), crows["upper_bound"].tolist()
+    ):
+        if name in info.constraint_indices:
             return _error_row(
                 model_name,
-                f"Constraint '{r['name']}' already exists in model '{model_name}'",
+                f"Constraint '{name}' already exists in model '{model_name}'",
             )
         idx = info.next_constraint_index
         info.next_constraint_index += 1
-        info.constraint_indices[r["name"]] = idx
-        info.constraint_names.append(r["name"])
-        info.constraint_lower_bounds.append(float(r["lower_bound"]))
-        info.constraint_upper_bounds.append(float(r["upper_bound"]))
+        info.constraint_indices[name] = idx
+        info.constraint_names.append(name)
+        info.constraint_lower_bounds.append(float(lb))
+        info.constraint_upper_bounds.append(float(ub))
         info.constraint_coefficients[idx] = []
-    for _, r in pdf[pdf["kind"] == _KIND_COEF].iterrows():
-        ci = info.constraint_indices.get(r["name"])
-        vi = info.variable_indices.get(r["name2"])
+    krows = pdf[pdf["kind"] == _KIND_COEF]
+    for con, var, coef in zip(
+        krows["name"].tolist(), krows["name2"].tolist(), krows["coefficient"].tolist()
+    ):
+        ci = info.constraint_indices.get(con)
+        vi = info.variable_indices.get(var)
         if ci is None or vi is None:
             return _error_row(
                 model_name,
-                f"unknown constraint '{r['name']}'"
-                if ci is None
-                else f"unknown variable '{r['name2']}'",
+                f"unknown constraint '{con}'" if ci is None else f"unknown variable '{var}'",
             )
-        info.constraint_coefficients[ci].append((vi, float(r["coefficient"])))
+        info.constraint_coefficients[ci].append((vi, float(coef)))
     try:
         rows = solve_model_info(info)
     except Exception as e:  # error-as-data, matching the reference contract
@@ -182,9 +192,10 @@ def solve_many(
 ) -> DataFrame:
     """Solve every model present in the input tables, in parallel.
 
-    One shuffle on ``model_name``; each group solves independently in a
-    pandas-UDF task. Output: BULK_RESULT_SCHEMA, one row per variable per
-    model (plus error rows per the status contract).
+    One shuffle on ``model_name``; each model solves independently inside
+    one pandas-UDF task (see :func:`solve_packed`). Output:
+    BULK_RESULT_SCHEMA, one row per variable per model (plus error rows per
+    the status contract).
     """
     ensure_shipped(variables_df.sparkSession)
     packed = _pack(variables_df, constraints_df, coefficients_df)
@@ -192,8 +203,8 @@ def solve_many(
 
 
 def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batched grouped-map kernel: rows of SEVERAL models (one hash bucket
-    of model_names) → concatenated solution rows. Same per-model logic as
+    """Batched kernel: rows of SEVERAL models (one hash bucket of
+    model_names) → concatenated solution rows. Same per-model logic as
     :func:`_solve_one_model`; batching amortizes the per-group Arrow
     round-trip + task overhead when models are tiny (see
     :func:`solve_packed`'s batch_models)."""
@@ -203,7 +214,14 @@ def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def solve_packed(packed: DataFrame, batch_models: bool | None = None) -> DataFrame:
+def _solve_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: one partition (= one bucket) → its solution rows."""
+    frames = [pdf for pdf in batches if not pdf.empty]
+    if frames:
+        yield _solve_model_batch(pd.concat(frames, ignore_index=True))
+
+
+def solve_packed(packed: DataFrame, batch_models: bool = True) -> DataFrame:
     """Solve models already in the packed long form (see :func:`_pack`).
 
     Callers that assemble the long frame themselves (e.g. in one SQL
@@ -211,50 +229,38 @@ def solve_packed(packed: DataFrame, batch_models: bool | None = None) -> DataFra
     model_name, kind ('v'|'c'|'k'), name, name2, lower_bound, upper_bound,
     obj, vtype, coefficient, ord.
 
-    ``batch_models`` (round 11, VERDICT r10 item 7): group by a HASH
-    BUCKET of model_name instead of model_name itself, so one pandas-UDF
-    task solves every model in its bucket. The opt05 decomposition showed
-    per-group overhead (Arrow round-trip + task scheduling per tiny
-    model), not simplex time, dominated the per-model form; bucketing
-    keeps the same one-shuffle scale shape (width = defaultParallelism,
-    so a 10k-model workload still fans out across every core) while
-    bounding the task count at the core count. Measured at sf100
-    (benchruns/opt05_decompose_sf100.txt): batched 0.78× of per-model.
+    ``batch_models`` (the default): one pandas task per hash bucket of
+    model_name, W = defaultParallelism buckets, so a 10k-model workload
+    fans out across every core while the task count stays at the core
+    count. ``repartition(W, "model_name")`` already places each row in
+    partition ``pmod(hash(model_name), W)`` (Spark's hash partitioner is
+    Murmur3 with seed 42, the same as ``F.hash``), so each partition IS a
+    bucket and ``mapInPandas`` solves it in one call. An earlier layout
+    computed that bucket as a column and then repartitioned BY the bucket,
+    hashing it a second time: buckets collided, and at W = 2 / 4 / 8 / 32
+    only 1 / 2 / 5 / 18 partitions held any models. The 0.78× of per-model
+    measured for that layout at sf100 (benchruns/opt05_decompose_sf100.txt)
+    ran on about half the cores.
 
-    Default is the batched form (round 11); ``HDS_OPT_BULK_PER_MODEL=1``
-    or ``batch_models=False`` restores per-model tasks — preferable only
-    when model count is near the core count AND model sizes are wildly
-    uneven (hash-bucketing could then pair two big models on one core
-    while others idle; with many tiny models, the measured regime here,
-    batching is a pure overhead win).
+    ``batch_models=False`` gives one pandas group per model — preferable
+    only when model count is near the core count AND model sizes are
+    wildly uneven (hash-bucketing can pair two big models on one core
+    while others idle; with many tiny models batching is a pure overhead
+    win).
     """
     spark = packed.sparkSession
-    if batch_models is None:
-        batch_models = os.environ.get("HDS_OPT_BULK_PER_MODEL") != "1"
     ensure_shipped(spark)
     # LP solves are CPU-bound Python work: spread models across every core
     # instead of inheriting spark.sql.shuffle.partitions (often tuned low
     # for tiny exchange stages — e.g. the latency bench uses 2, which would
-    # serialize 200 solves onto 2 workers). The explicit repartition on the
-    # grouping key satisfies applyInPandas' clustering requirement, so no
-    # second exchange is added.
-    width = spark.sparkContext.defaultParallelism
+    # serialize 200 solves onto 2 workers). A repartition with an explicit
+    # count is never coalesced by AQE; on the per-model path it also
+    # satisfies applyInPandas' clustering requirement, so no second
+    # exchange is added.
+    spread = packed.repartition(spark.sparkContext.defaultParallelism, "model_name")
     if batch_models:
-        bucket = F.pmod(F.hash("model_name"), F.lit(width))
-        return (
-            packed.withColumn("__bucket", bucket)
-            .repartition(width, "__bucket")
-            .groupBy("__bucket")
-            .applyInPandas(
-                lambda pdf: _solve_model_batch(pdf.drop(columns="__bucket")),
-                BULK_RESULT_SCHEMA,
-            )
-        )
-    return (
-        packed.repartition(width, "model_name")
-        .groupBy("model_name")
-        .applyInPandas(_solve_one_model, BULK_RESULT_SCHEMA)
-    )
+        return spread.mapInPandas(_solve_partition, BULK_RESULT_SCHEMA)
+    return spread.groupBy("model_name").applyInPandas(_solve_one_model, BULK_RESULT_SCHEMA)
 
 
 def solve_from_tables(

@@ -22,9 +22,11 @@ cold solver"); it never returns a wrong answer silently — final primal
 AND dual feasibility are re-checked before 'Optimal' is reported, and an
 iteration cap turns cycling into a fallback, not a hang.
 
-Model sizes here are tiny (≤ ~50 columns after slacks), so every
-iteration refactorizes densely like `simplex._simplex_phase` — no
-numerical drift, no update formulas to get wrong.
+Model sizes here are tiny (≤ ~50 columns after slacks) and a warm node
+takes a handful of pivots, so every iteration refactorizes densely — no
+numerical drift, no update formulas to get wrong. (The primal
+`simplex._simplex_phase`, which runs thousands of pivots on bulk LPs,
+instead updates B⁻¹ by rank-1 steps and refactorizes every 32 pivots.)
 """
 
 from __future__ import annotations

@@ -172,3 +172,46 @@ def test_solve_packed_batched_equals_per_model(spark):
     a = {tuple(r) for r in solve_packed(packed, batch_models=False).collect()}
     b = {tuple(r) for r in solve_packed(packed, batch_models=True).collect()}
     assert a == b and len(a) > 0
+
+
+def test_solve_many_one_bucket_per_partition(spark):
+    """Every bucket pmod(hash(model_name), W) gets a task of its own:
+    each output partition holds the models of exactly one bucket, and as
+    many partitions hold models as there are distinct buckets. Bucketing
+    by a precomputed bucket column hashes it a second time and lets
+    buckets share a partition (2 partitions for 4 buckets at W = 4)."""
+    import pyspark.sql.functions as F
+
+    width = spark.sparkContext.defaultParallelism
+    names = [f"spread{i:02d}" for i in range(24)]
+    v = spark.createDataFrame(
+        [(m, var, lb, 1e30, 1.0, "continuous", o)
+         for m in names for o, (var, lb) in enumerate([("x", 0.0), ("y", 1.0)])],
+        VAR_SCHEMA,
+    )
+    c = spark.createDataFrame(
+        [(m, con, -1e30, ub, o) for m in names for o, (con, ub) in enumerate([("c1", 7.0), ("c2", 9.0)])],
+        CON_SCHEMA,
+    )
+    k = spark.createDataFrame(
+        [(m, con, var, a) for m in names
+         for con, var, a in [("c1", "x", 1.0), ("c1", "y", 2.0), ("c2", "x", 3.0), ("c2", "y", 1.0)]],
+        COEF_SCHEMA,
+    )
+    rows = (
+        solve_many(v, c, k)
+        .select(
+            "model_name",
+            "status",
+            F.spark_partition_id().alias("pid"),
+            F.pmod(F.hash("model_name"), F.lit(width)).alias("bucket"),
+        )
+        .collect()
+    )
+    assert {r["model_name"] for r in rows} == set(names)
+    assert {r["status"] for r in rows} == {"Optimal"}
+    buckets_of: dict[int, set[int]] = {}
+    for r in rows:
+        buckets_of.setdefault(r["pid"], set()).add(r["bucket"])
+    assert all(len(b) == 1 for b in buckets_of.values()), buckets_of
+    assert len(buckets_of) == len({r["bucket"] for r in rows}), buckets_of

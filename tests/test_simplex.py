@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from highs_duckdb_spark.optim.simplex import solve_lp, solve_milp
+from highs_duckdb_spark.optim.simplex import _PIVOTS, _TOL, solve_lp, solve_milp
 
 INF = 1e30
 
@@ -409,3 +409,164 @@ def test_warm_dual_simplex_infeasible_child_detected():
     assert st == "Infeasible"
     cold = solve_lp(c, a, row_lb, row_ub, lb, child_ub)
     assert cold.status == "Infeasible"
+
+
+# ---------------------------------------------------------------------------
+# Pivot identity of the updated-inverse simplex against the dense reference
+# ---------------------------------------------------------------------------
+
+
+def _dense_simplex_phase(
+    A: np.ndarray,
+    b: np.ndarray,
+    c: np.ndarray,
+    basis: list[int],
+    allowed: np.ndarray,
+    max_iter: int = 20000,
+) -> str:
+    """Revised simplex with Bland's rule; refactorizes every iteration.
+
+    Mutates ``basis`` in place. Returns 'Optimal'|'Unbounded'|'Unknown'.
+    ``allowed[j]`` False bars column j from entering (used to freeze
+    artificials in phase 2).
+    """
+    m, n = A.shape
+    for _ in range(max_iter):
+        B = A[:, basis]
+        try:
+            xB = np.linalg.solve(B, b)
+            y = np.linalg.solve(B.T, c[basis])
+        except np.linalg.LinAlgError:
+            return "Unknown"
+        rc = c - y @ A
+        entering = -1
+        for j in range(n):  # Bland: lowest index with negative reduced cost
+            if allowed[j] and j not in basis and rc[j] < -_TOL:
+                entering = j
+                break
+        if entering < 0:
+            return "Optimal"
+        d = np.linalg.solve(B, A[:, entering])
+        ratios = np.full(m, np.inf)
+        pos = d > _TOL
+        ratios[pos] = xB[pos] / d[pos]
+        if not pos.any():
+            return "Unbounded"
+        theta = ratios.min()
+        # Bland tie-break: leaving = smallest basis column index among ties
+        candidates = [i for i in range(m) if pos[i] and ratios[i] <= theta + _TOL]
+        leave_pos = min(candidates, key=lambda i: basis[i])
+        basis[leave_pos] = entering
+        _PIVOTS["primal"] += 1
+    return "Unknown"
+
+
+def _planted_lp(rng, n, m, free_share=0.0):
+    """A feasible, bounded LP around a planted optimum x (KKT by
+    construction: c = Aᵀy + d). Boxed columns give standard-form bound
+    rows; with ``free_share`` some columns become flipped (upper bound
+    only) or free, both kept basic (d = 0) so the optimum stays bounded."""
+    a = np.zeros((m, n))
+    for i in range(m):
+        mask = rng.random(n) < max(0.3, 4.0 / n)
+        mask[rng.integers(0, n)] = True
+        a[i, mask] = rng.integers(-5, 6, int(mask.sum()))
+        a[i, mask & (a[i] == 0)] = 1.0
+    col_lb, col_ub = np.zeros(n), rng.integers(5, 21, n).astype(float)
+    cstat = rng.choice(3, size=n, p=[0.35, 0.2, 0.45])  # at lb / at ub / between
+    x = np.where(cstat == 0, col_lb, col_ub)
+    mid = cstat == 2
+    x[mid] = np.round(rng.uniform(col_lb[mid] + 0.5, col_ub[mid] - 0.5), 2)
+    d = np.zeros(n)
+    d[cstat == 0] = rng.integers(1, 13, int((cstat == 0).sum())) / 4
+    d[cstat == 1] = -rng.integers(1, 13, int((cstat == 1).sum())) / 4
+    odd = mid & (rng.random(n) < free_share)
+    col_lb[odd & (rng.random(n) < 0.5)] = -INF  # flipped, or free if also
+    col_ub[odd & (rng.random(n) < 0.5)] = INF
+    rstat = rng.choice(4, size=m, p=[0.3, 0.3, 0.1, 0.3])  # at lb / ub / eq / slack
+    act = a @ x
+    slack = rng.integers(1, 10, m).astype(float)
+    row_lb = np.where(rstat == 1, np.where(rng.random(m) < 0.5, -INF, act - slack), act)
+    row_ub = np.where(rstat == 0, np.where(rng.random(m) < 0.5, INF, act + slack), act)
+    row_lb[rstat == 3] = (act - slack)[rstat == 3]
+    row_ub[rstat == 3] = (act + slack)[rstat == 3]
+    y = np.zeros(m)
+    y[rstat == 0] = rng.integers(1, 13, int((rstat == 0).sum())) / 4
+    y[rstat == 1] = -rng.integers(1, 13, int((rstat == 1).sum())) / 4
+    y[rstat == 2] = rng.integers(-12, 13, int((rstat == 2).sum())) / 4
+    return a.T @ y + d, a, row_lb, row_ub, col_lb, col_ub
+
+
+def _scenario_arrays(variables, constraints):
+    names = [v[0] for v in variables]
+    col = {v: j for j, v in enumerate(names)}
+    a = np.zeros((len(constraints), len(names)))
+    for i, (_, _, _, coeffs) in enumerate(constraints):
+        for v, coef in coeffs.items():
+            a[i, col[v]] = coef
+    row_lb = [lb for _, lb, _, _ in constraints]
+    row_ub = [ub for _, _, ub, _ in constraints]
+    return a, row_lb, row_ub
+
+
+def _pivot_identity_cases():
+    from highs_duckdb_spark.optim import scenarios as sc
+
+    cases = []
+    for seed, (n, m, free) in enumerate(
+        [(2, 2, 0), (5, 3, 0), (8, 4, 0.5), (12, 6, 0), (16, 8, 0.5), (20, 9, 0),
+         (26, 12, 0.5), (34, 11, 0), (34, 14, 0.5), (40, 20, 0)]
+    ):
+        cases.append((f"planted{seed}", "lp", *_planted_lp(np.random.default_rng(seed), n, m, free)))
+    # ≥ 1,000 pivots, so many refactorization periods pass (asserted below)
+    cases.append(("planted_long", "lp", *_planted_lp(np.random.default_rng(1), 60, 30)))
+    # the reference min-cost flow: degenerate, rank-deficient conservation rows
+    a, rl, ru = _scenario_arrays(sc.NETWORK_FLOW_ARCS, sc.NETWORK_FLOW_CONSTRAINTS)
+    cost = [v[3] for v in sc.NETWORK_FLOW_ARCS]
+    lb = [v[1] for v in sc.NETWORK_FLOW_ARCS]
+    ub = [v[2] for v in sc.NETWORK_FLOW_ARCS]
+    cases.append(("network_flow", "lp", cost, a, rl, ru, lb, ub))
+    # the reference datacenter MIP and seeded binary knapsacks
+    a, rl, ru = _scenario_arrays(sc.DATACENTER_VARS, sc.DATACENTER_CONSTRAINTS)
+    k = len(sc.DATACENTER_VARS)
+    cases.append(("datacenter", "milp", [v[1] for v in sc.DATACENTER_VARS], a, rl, ru, [0] * k, [1] * k))
+    for seed in range(3):
+        rng = np.random.default_rng(600 + seed)
+        a = rng.uniform(0.2, 3.0, (2, 12))
+        cases.append((f"knapsack{seed}", "milp", -rng.uniform(1, 10, 12), a,
+                      [-INF] * 2, list(a @ np.full(12, 0.5)), [0] * 12, [1] * 12))
+    # infeasible rows (x0 + x1 ≥ 5 and ≤ 3 through two rows) and unbounded
+    cases.append(("infeasible", "lp", [1, 1], [[1, 1], [1, 1]], [5, -INF], [INF, 3], [0, 0], [INF, INF]))
+    cases.append(("unbounded", "lp", [-1, 0], [[1, -1]], [-INF], [2], [0, 0], [INF, INF]))
+    return cases
+
+
+def test_simplex_pivots_match_dense_reference(monkeypatch):
+    """The B⁻¹ rank-1 update with periodic refactorization takes exactly
+    the pivots of a refactorize-every-pivot revised simplex and returns
+    bit-identical x, objective and reduced costs: the final basis is
+    re-solved from scratch, so only the pivot path could differ."""
+    from highs_duckdb_spark.optim import simplex as sx
+
+    def run(phase, kind, c, a, rl, ru, lb, ub):
+        monkeypatch.setattr(sx, "_simplex_phase", phase)
+        _PIVOTS["primal"] = 0
+        if kind == "lp":
+            r = solve_lp(c, a, rl, ru, lb, ub)
+        else:
+            r = solve_milp(c, a, rl, ru, lb, ub, [True] * len(c))
+        return r, _PIVOTS["primal"]
+
+    updated = sx._simplex_phase
+    statuses = set()
+    for name, kind, *model in _pivot_identity_cases():
+        ref, ref_pivots = run(_dense_simplex_phase, kind, *model)
+        got, got_pivots = run(updated, kind, *model)
+        statuses.add(ref.status)
+        assert (got.status, got_pivots) == (ref.status, ref_pivots), name
+        assert got.x.tobytes() == ref.x.tobytes(), name
+        assert got.objective == ref.objective, name
+        assert got.reduced_costs.tobytes() == ref.reduced_costs.tobytes(), name
+        if name == "planted_long":
+            assert ref_pivots >= 1000, ref_pivots
+    assert statuses == {"Optimal", "Infeasible", "Unbounded"}

@@ -2,12 +2,13 @@
 """opt05 decomposition (VERDICT r10 item 7): 1.3 s at sf100 for 25 tiny
 LPs smells like per-group overhead, not simplex time. Split it:
 
-1. full opt05 (per-model applyInPandas tasks — the shipped form)
+1. full opt05 with per-model applyInPandas groups
+   (solve_packed(batch_models=False))
 2. assembly-only: materialize the packed long frame (scan + agg + union)
 3. solve-only: the same 25 models solved in a driver loop (pure
    simplex + model-build Python time, no Spark)
-4. batched arm: solve_packed(batch_models=True) — one task per hash
-   bucket of models instead of one per model
+4. batched arm: solve_packed(batch_models=True) — the shipped form, one
+   task per hash bucket of models instead of one group per model
 
 Best-of-RUNS each, same session (steal-window safe). Usage:
   python tools/opt05_decompose.py SF_DIR [runs]
@@ -27,7 +28,6 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
-    from highs_duckdb_spark.operators import QUERIES
     from highs_duckdb_spark.operators.optimization import _opt05_packed
     from highs_duckdb_spark.optim.bulk import solve_packed
     from highs_duckdb_spark.session import ensure_shipped, get_spark, tune_for_data
@@ -54,40 +54,9 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         return best
 
-    # force the per-model form for this arm: solve_packed defaults to
-    # BATCHED since round 11, which would make both arms the same plan
-    # and void the decomposition (review r11)
-    def _full() -> None:
-        os.environ["HDS_OPT_BULK_PER_MODEL"] = "1"
-        try:
-            _mat(QUERIES["opt05_solve_many_bulk"].builder(spark, sf_dir))
-        finally:
-            os.environ.pop("HDS_OPT_BULK_PER_MODEL", None)
-
-    full = _best(_full)
-    print(f"opt05 full (per-model tasks) {full:7.3f}s", flush=True)
-
-    asm = _best(lambda: _mat(_opt05_packed(spark, sf_dir)))
-    print(f"assembly-only (packed frame) {asm:7.3f}s", flush=True)
-
-    # driver-loop solve: same models, no Spark in the timed window
-    import pandas as pd
-
-    pdf = _opt05_packed(spark, sf_dir).toPandas()
-    from highs_duckdb_spark.optim.bulk import _solve_one_model
-
-    def driver_solve() -> None:
-        pd.concat(
-            [_solve_one_model(g) for _, g in pdf.groupby("model_name", sort=False)],
-            ignore_index=True,
-        )
-
-    solve = _best(driver_solve)
-    n_models = pdf["model_name"].nunique()
-    print(f"solve-only ({n_models} models, driver loop) {solve:7.3f}s", flush=True)
-
-    def batched() -> None:
-        result = solve_packed(_opt05_packed(spark, sf_dir), batch_models=True)
+    def _opt05(batch_models: bool) -> None:
+        """opt05's query shape with the solve layout chosen explicitly."""
+        result = solve_packed(_opt05_packed(spark, sf_dir), batch_models=batch_models)
         _mat(
             result.selectExpr(
                 "model_name",
@@ -101,7 +70,21 @@ def main() -> None:
             .sortWithinPartitions("model_name", "variable_index")
         )
 
-    bat = _best(batched)
+    full = _best(lambda: _opt05(batch_models=False))
+    print(f"opt05 full (per-model tasks) {full:7.3f}s", flush=True)
+
+    asm = _best(lambda: _mat(_opt05_packed(spark, sf_dir)))
+    print(f"assembly-only (packed frame) {asm:7.3f}s", flush=True)
+
+    # driver-loop solve: same models, no Spark in the timed window
+    from highs_duckdb_spark.optim.bulk import _solve_model_batch
+
+    pdf = _opt05_packed(spark, sf_dir).toPandas()
+    solve = _best(lambda: _solve_model_batch(pdf))
+    n_models = pdf["model_name"].nunique()
+    print(f"solve-only ({n_models} models, driver loop) {solve:7.3f}s", flush=True)
+
+    bat = _best(lambda: _opt05(batch_models=True))
     print(f"opt05 batched (bucket tasks) {bat:7.3f}s", flush=True)
     print(
         f"split: assembly={asm:.3f}s solve={solve:.3f}s "
