@@ -18,7 +18,11 @@ LLM-data-pipeline operators (dedup, similarity search, text analysis,
 multimodal plumbing) designed for 100 TB scale.
 """
 
+from highs_duckdb_spark import _worker
 from highs_duckdb_spark.session import get_spark, load_table, load_tables
+
+# per-task zip re-reads in Python workers (see _worker); a no-op in the driver
+_worker.install_in_task()
 
 __version__ = "0.1.0"
 

@@ -85,19 +85,24 @@ def _pack(variables_df: DataFrame, constraints_df: DataFrame, coefficients_df: D
     return v.unionByName(c).unionByName(k)
 
 
-def _error_row(model_name: str, message: str) -> pd.DataFrame:
+def _result_frame(model_name: str, rows: list[tuple]) -> pd.DataFrame:
+    """Solution rows (variable_name, variable_index, solution_value,
+    reduced_cost, status) of one model → a BULK_RESULT_SCHEMA frame."""
+    names, indices, values, costs, statuses = zip(*rows)
     return pd.DataFrame(
-        [
-            {
-                "model_name": model_name,
-                "variable_name": "N/A",
-                "variable_index": "ERROR",
-                "solution_value": 0.0,
-                "reduced_cost": 0.0,
-                "status": f"ERROR: {message}",
-            }
-        ]
+        {
+            "model_name": [model_name] * len(rows),
+            "variable_name": names,
+            "variable_index": indices,
+            "solution_value": values,
+            "reduced_cost": costs,
+            "status": statuses,
+        }
     )
+
+
+def _error_row(model_name: str, message: str) -> pd.DataFrame:
+    return _result_frame(model_name, [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {message}")])
 
 
 def _solve_one_model(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -170,19 +175,7 @@ def _solve_one_model(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = solve_model_info(info)
     except Exception as e:  # error-as-data, matching the reference contract
         rows = [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")]
-    return pd.DataFrame(
-        [
-            {
-                "model_name": model_name,
-                "variable_name": n,
-                "variable_index": i,
-                "solution_value": s,
-                "reduced_cost": rc,
-                "status": st,
-            }
-            for (n, i, s, rc, st) in rows
-        ]
-    )
+    return _result_frame(model_name, rows)
 
 
 def solve_many(
@@ -197,9 +190,7 @@ def solve_many(
     BULK_RESULT_SCHEMA, one row per variable per model (plus error rows per
     the status contract).
     """
-    ensure_shipped(variables_df.sparkSession)
-    packed = _pack(variables_df, constraints_df, coefficients_df)
-    return solve_packed(packed)
+    return solve_packed(_pack(variables_df, constraints_df, coefficients_df))
 
 
 def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:

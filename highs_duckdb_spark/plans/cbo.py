@@ -137,7 +137,7 @@ RF_MAX_BUILD_SEL = float(os.environ.get("HDS_RF_MAX_BUILD_SEL", "0.5"))
 #: InjectRuntimeFilter can still play).
 RF_MAX_KEY_BYTES = int(os.environ.get("HDS_RF_MAX_KEY_BYTES", str(32 << 20)))
 #: charged bytes per broadcast key (8-byte key + hash-set overhead)
-RF_KEY_BYTES = float(os.environ.get("HDS_RF_KEY_BYTES", "16"))
+RF_KEY_BYTES = 16
 #: a broadcast byte is also charged this multiple of a shuffled byte: the
 #: key set replicates to EVERY executor (design scale: hundreds) while a
 #: shuffled byte moves once — the second half of the same A/B split.
