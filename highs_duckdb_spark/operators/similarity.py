@@ -2053,9 +2053,9 @@ def s13_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (2000 vecs × 64 dims × 10 queries = 1.28M joined rows at sf0.1).
     # The expanded vector assembles in dim order (array_sort on the
     # (dim, qp) structs), so the zip_with fold adds val·qp in ascending
-    # dim — the SAME addition order the hash aggregate's partial sums
-    # used (corpusflat emitted dims in array order per vec, and IEEE
-    # 0.0 + x == x for the fold's init), so every score is bit-unchanged.
+    # dim. The old hash aggregate's partial-sum order was never
+    # guaranteed, so the fold is not claimed bit-equal to it; what is
+    # pinned is oracle parity of the 6-dp rounded scores.
     qpvec = qprime.groupBy("query_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "qp"))), lambda s: s["qp"]

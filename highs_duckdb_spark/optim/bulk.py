@@ -4,11 +4,11 @@ The reference's own examples define models *relationally* (three tables:
 variables / constraints / coefficients — reference: example_usage.sql:19-36,
 test/sql/highs.test:31-51). This module accepts exactly that encoding as
 DataFrames and solves **many independent models in parallel**: rows shuffle
-once on ``model_name`` into one partition per core, and each partition's
-models are assembled + solved inside a pandas UDF on an executor. Model
-construction is distributed; each model's solve runs inside one task. This
-is how thousands of per-key LP/MIPs (one per customer/region/scenario) run
-on a cluster.
+once on ``model_name`` into one partition per core
+(``repartition(W, "model_name")``), and ``mapInPandas`` assembles and solves
+each partition's models in one task per hash bucket. Model construction is
+distributed; each model's solve runs inside one task. This is how thousands
+of per-key LP/MIPs (one per customer/region/scenario) run on a cluster.
 
 Schemas (matching FIXTURES.md §A):
 
@@ -20,162 +20,194 @@ Schemas (matching FIXTURES.md §A):
 Ordering: the reference assigns indices by insertion order; a distributed
 table has no row order, so the bulk API uses **name-sorted order** unless an
 explicit integer ``ord`` column is provided on variables/constraints.
+
+Plan construction is a fixed cost per call that the driver pays in Py4J
+round trips, and on small batches it rivals the solves themselves. Built
+from chained ``F.lit(...).cast(...).alias(...)`` projections and two
+``unionByName`` calls, :func:`_pack` alone made ~720 round trips and took
+~90–105 ms p50 (4-core host, a 21-model batch). It is therefore three
+``selectExpr`` projections joined by a positional ``union`` (~17 ms; one
+``spark.sql`` statement over the three frames as temporary views measured
+~26 ms, most of it creating the views), the result schema is a ready
+``StructType`` rather than a DDL string the JVM must parse, and a warm
+:func:`solve_many` call makes ~105 round trips in all.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator, Sequence
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from highs_duckdb_spark.session import ensure_shipped
-from highs_duckdb_spark.optim.registry import (
-    SOLVE_RESULT_SCHEMA,
-    HighsModelInfo,
-    solve_model_info,
-)
+from highs_duckdb_spark.optim.registry import HighsModelInfo, solve_model_info
 
-BULK_RESULT_SCHEMA = "model_name string, " + SOLVE_RESULT_SCHEMA
+#: ``"model_name string, " + registry.SOLVE_RESULT_SCHEMA``, built in Python
+#: so that no call parses it through the JVM
+BULK_RESULT_SCHEMA = StructType(
+    [
+        StructField("model_name", StringType()),
+        StructField("variable_name", StringType()),
+        StructField("variable_index", StringType()),
+        StructField("solution_value", DoubleType()),
+        StructField("reduced_cost", DoubleType()),
+        StructField("status", StringType()),
+    ]
+)
 
 _KIND_VAR, _KIND_CON, _KIND_COEF = "v", "c", "k"
 
+#: each input table's projection onto the packed columns, in the packed
+#: order (the union is positional); the ``ord`` expression comes last
+_PACK_VARIABLES = (
+    "model_name", f"'{_KIND_VAR}' AS kind", "variable_name AS name",
+    "CAST(NULL AS STRING) AS name2", "CAST(lower_bound AS DOUBLE) AS lower_bound",
+    "CAST(upper_bound AS DOUBLE) AS upper_bound", "CAST(obj_coefficient AS DOUBLE) AS obj",
+    "var_type AS vtype", "CAST(NULL AS DOUBLE) AS coefficient",
+)
+_PACK_CONSTRAINTS = (
+    "model_name", f"'{_KIND_CON}'", "constraint_name", "CAST(NULL AS STRING)",
+    "CAST(lower_bound AS DOUBLE)", "CAST(upper_bound AS DOUBLE)", "CAST(NULL AS DOUBLE)",
+    "CAST(NULL AS STRING)", "CAST(NULL AS DOUBLE)",
+)
+_PACK_COEFFICIENTS = (
+    "model_name", f"'{_KIND_COEF}'", "constraint_name", "variable_name",
+    "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)",
+    "CAST(NULL AS STRING)", "CAST(coefficient AS DOUBLE)",
+)
+
+
+def _ord_expr(df: DataFrame) -> str:
+    return "CAST(ord AS BIGINT) AS ord" if "ord" in df.columns else "CAST(NULL AS BIGINT) AS ord"
+
 
 def _pack(variables_df: DataFrame, constraints_df: DataFrame, coefficients_df: DataFrame) -> DataFrame:
-    """Union the three model tables into one long frame keyed by model_name."""
-    has_vord = "ord" in variables_df.columns
-    has_cord = "ord" in constraints_df.columns
-    v = variables_df.select(
-        "model_name",
-        F.lit(_KIND_VAR).alias("kind"),
-        F.col("variable_name").alias("name"),
-        F.lit(None).cast("string").alias("name2"),
-        F.col("lower_bound").cast("double"),
-        F.col("upper_bound").cast("double"),
-        F.col("obj_coefficient").cast("double").alias("obj"),
-        F.col("var_type").alias("vtype"),
-        F.lit(None).cast("double").alias("coefficient"),
-        (F.col("ord").cast("long") if has_vord else F.lit(None).cast("long")).alias("ord"),
-    )
-    c = constraints_df.select(
-        "model_name",
-        F.lit(_KIND_CON).alias("kind"),
-        F.col("constraint_name").alias("name"),
-        F.lit(None).cast("string").alias("name2"),
-        F.col("lower_bound").cast("double"),
-        F.col("upper_bound").cast("double"),
-        F.lit(None).cast("double").alias("obj"),
-        F.lit(None).cast("string").alias("vtype"),
-        F.lit(None).cast("double").alias("coefficient"),
-        (F.col("ord").cast("long") if has_cord else F.lit(None).cast("long")).alias("ord"),
-    )
-    k = coefficients_df.select(
-        "model_name",
-        F.lit(_KIND_COEF).alias("kind"),
-        F.col("constraint_name").alias("name"),
-        F.col("variable_name").alias("name2"),
-        F.lit(None).cast("double").alias("lower_bound"),
-        F.lit(None).cast("double").alias("upper_bound"),
-        F.lit(None).cast("double").alias("obj"),
-        F.lit(None).cast("string").alias("vtype"),
-        F.col("coefficient").cast("double"),
-        F.lit(None).cast("long").alias("ord"),
-    )
-    return v.unionByName(c).unionByName(k)
+    """Union the three model tables into one long frame keyed by model_name:
+    model_name, kind, name, name2, lower_bound, upper_bound, obj, vtype,
+    coefficient, ord. One ``selectExpr`` per table and a positional
+    ``union``: each call ships its whole projection as SQL text, so
+    building the frame costs ~50 Py4J round trips, not one per literal."""
+    v = variables_df.selectExpr(*_PACK_VARIABLES, _ord_expr(variables_df))
+    c = constraints_df.selectExpr(*_PACK_CONSTRAINTS, _ord_expr(constraints_df))
+    k = coefficients_df.selectExpr(*_PACK_COEFFICIENTS, "CAST(NULL AS BIGINT) AS ord")
+    return v.union(c).union(k)
 
 
-def _result_frame(model_name: str, rows: list[tuple]) -> pd.DataFrame:
-    """Solution rows (variable_name, variable_index, solution_value,
-    reduced_cost, status) of one model → a BULK_RESULT_SCHEMA frame."""
-    names, indices, values, costs, statuses = zip(*rows)
-    return pd.DataFrame(
-        {
-            "model_name": [model_name] * len(rows),
-            "variable_name": names,
-            "variable_index": indices,
-            "solution_value": values,
-            "reduced_cost": costs,
-            "status": statuses,
-        }
+def _isnull(x) -> bool:
+    return x is None or x != x
+
+
+def _in_order(rows: list[int], ords: list, names: list) -> list[int]:
+    """Rows of one kind in index order: stable on (ord, name) when every
+    ord is set, else on name alone, a null name last — the order of
+    pandas' ``sort_values(kind="mergesort")`` on the same keys."""
+
+    def name_key(i: int) -> tuple:
+        n = names[i]
+        return (True, "") if _isnull(n) else (False, n)
+
+    if all(not _isnull(ords[i]) for i in rows):
+        return sorted(rows, key=lambda i: (ords[i], name_key(i)))
+    return sorted(rows, key=name_key)
+
+
+def _solve_groups(pdf: pd.DataFrame, groups: Iterable[Sequence[int]]) -> pd.DataFrame:
+    """Packed rows (see :func:`_pack`) → BULK_RESULT_SCHEMA rows, one model
+    per group of row positions, in group order. Errors are data: a model
+    that cannot be built or solved yields one ERROR row, never an
+    exception out of the task (an empty frame would also fail Spark's
+    schema check)."""
+    model, kind, name, name2, lb, ub, obj, vtype, coef, ords = (
+        pdf[c].tolist()
+        for c in (
+            "model_name", "kind", "name", "name2", "lower_bound",
+            "upper_bound", "obj", "vtype", "coefficient", "ord",
+        )
     )
+    out: tuple[list, ...] = ([], [], [], [], [], [])
 
+    def emit(model_name, rows: list[tuple]) -> None:
+        out[0].extend([model_name] * len(rows))
+        for col, values in zip(out[1:], zip(*rows)):
+            col.extend(values)
 
-def _error_row(model_name: str, message: str) -> pd.DataFrame:
-    return _result_frame(model_name, [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {message}")])
+    def build(model_name, rows: Sequence[int]) -> HighsModelInfo | str:
+        """The model, or the message of its ERROR row."""
+        by_kind: dict[str, list[int]] = {_KIND_VAR: [], _KIND_CON: [], _KIND_COEF: []}
+        for i in rows:
+            if kind[i] in by_kind:
+                by_kind[kind[i]].append(i)
+        if not by_kind[_KIND_VAR]:
+            return "model has no variables"
+        info = HighsModelInfo()
+        for i in _in_order(by_kind[_KIND_VAR], ords, name):
+            if name[i] in info.variable_indices:
+                # registry-path parity: duplicate names are an ERROR row, not a
+                # silently malformed LP (reference: src/highs_extension.cpp:177-182)
+                return f"Variable '{name[i]}' already exists in model '{model_name}'"
+            info.variable_indices[name[i]] = info.next_var_index
+            info.next_var_index += 1
+            info.variable_names.append(name[i])
+            info.obj_coefficients.append(float(obj[i]))
+            info.var_lower_bounds.append(float(lb[i]))
+            info.var_upper_bounds.append(float(ub[i]))
+            info.variable_types.append(vtype[i])
+        for i in _in_order(by_kind[_KIND_CON], ords, name):
+            if name[i] in info.constraint_indices:
+                return f"Constraint '{name[i]}' already exists in model '{model_name}'"
+            idx = info.next_constraint_index
+            info.next_constraint_index += 1
+            info.constraint_indices[name[i]] = idx
+            info.constraint_names.append(name[i])
+            info.constraint_lower_bounds.append(float(lb[i]))
+            info.constraint_upper_bounds.append(float(ub[i]))
+            info.constraint_coefficients[idx] = []
+        for i in by_kind[_KIND_COEF]:
+            ci = info.constraint_indices.get(name[i])
+            vi = info.variable_indices.get(name2[i])
+            if ci is None or vi is None:
+                return (
+                    f"unknown constraint '{name[i]}'"
+                    if ci is None
+                    else f"unknown variable '{name2[i]}'"
+                )
+            info.constraint_coefficients[ci].append((vi, float(coef[i])))
+        return info
+
+    for rows in groups:
+        model_name = model[rows[0]]
+        info = build(model_name, rows)
+        if isinstance(info, str):
+            emit(model_name, [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {info}")])
+            continue
+        try:
+            emit(model_name, solve_model_info(info))
+        except Exception as e:  # error-as-data, matching the reference contract
+            emit(model_name, [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")])
+    return pd.DataFrame(dict(zip(BULK_RESULT_SCHEMA.names, out)))
 
 
 def _solve_one_model(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map kernel: rows of ONE model → solution rows (runs on executors)."""
-    model_name = pdf["model_name"].iloc[0]
-    info = HighsModelInfo()
-    vrows = pdf[pdf["kind"] == _KIND_VAR]
-    if vrows.empty:
-        # constraints/coefficients referencing a model with no variables
-        # (errors-are-data: never raise out of the kernel — an empty result
-        # frame would also fail Spark's schema check)
-        return _error_row(model_name, "model has no variables")
-    vrows = vrows.sort_values(
-        ["ord", "name"] if vrows["ord"].notna().all() else ["name"], kind="mergesort"
-    )
-    for name, obj, lb, ub, vtype in zip(
-        vrows["name"].tolist(),
-        vrows["obj"].tolist(),
-        vrows["lower_bound"].tolist(),
-        vrows["upper_bound"].tolist(),
-        vrows["vtype"].tolist(),
-    ):
-        if name in info.variable_indices:
-            # registry-path parity: duplicate names are an ERROR row, not a
-            # silently malformed LP (reference: src/highs_extension.cpp:177-182)
-            return _error_row(
-                model_name,
-                f"Variable '{name}' already exists in model '{model_name}'",
-            )
-        idx = info.next_var_index
-        info.next_var_index += 1
-        info.variable_indices[name] = idx
-        info.variable_names.append(name)
-        info.obj_coefficients.append(float(obj))
-        info.var_lower_bounds.append(float(lb))
-        info.var_upper_bounds.append(float(ub))
-        info.variable_types.append(vtype)
-    crows = pdf[pdf["kind"] == _KIND_CON]
-    crows = crows.sort_values(
-        ["ord", "name"] if crows["ord"].notna().all() else ["name"], kind="mergesort"
-    )
-    for name, lb, ub in zip(
-        crows["name"].tolist(), crows["lower_bound"].tolist(), crows["upper_bound"].tolist()
-    ):
-        if name in info.constraint_indices:
-            return _error_row(
-                model_name,
-                f"Constraint '{name}' already exists in model '{model_name}'",
-            )
-        idx = info.next_constraint_index
-        info.next_constraint_index += 1
-        info.constraint_indices[name] = idx
-        info.constraint_names.append(name)
-        info.constraint_lower_bounds.append(float(lb))
-        info.constraint_upper_bounds.append(float(ub))
-        info.constraint_coefficients[idx] = []
-    krows = pdf[pdf["kind"] == _KIND_COEF]
-    for con, var, coef in zip(
-        krows["name"].tolist(), krows["name2"].tolist(), krows["coefficient"].tolist()
-    ):
-        ci = info.constraint_indices.get(con)
-        vi = info.variable_indices.get(var)
-        if ci is None or vi is None:
-            return _error_row(
-                model_name,
-                f"unknown constraint '{con}'" if ci is None else f"unknown variable '{var}'",
-            )
-        info.constraint_coefficients[ci].append((vi, float(coef)))
-    try:
-        rows = solve_model_info(info)
-    except Exception as e:  # error-as-data, matching the reference contract
-        rows = [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")]
-    return _result_frame(model_name, rows)
+    """Grouped-map kernel (``batch_models=False``): rows of ONE model →
+    its solution rows."""
+    return _solve_groups(pdf, [range(len(pdf))])
+
+
+def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Batched kernel: rows of SEVERAL models (one hash bucket of
+    model_names) → their solution rows, models in first-appearance order.
+    Rows with a null model_name belong to no model and are skipped, as a
+    pandas ``groupby`` would. Batching amortizes the per-group Arrow
+    round-trip + task overhead when models are tiny (see
+    :func:`solve_packed`'s batch_models)."""
+    groups: dict[object, list[int]] = {}
+    for i, m in enumerate(pdf["model_name"].tolist()):
+        if not _isnull(m):
+            groups.setdefault(m, []).append(i)
+    return _solve_groups(pdf, groups.values())
 
 
 def solve_many(
@@ -191,18 +223,6 @@ def solve_many(
     the status contract).
     """
     return solve_packed(_pack(variables_df, constraints_df, coefficients_df))
-
-
-def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batched kernel: rows of SEVERAL models (one hash bucket of
-    model_names) → concatenated solution rows. Same per-model logic as
-    :func:`_solve_one_model`; batching amortizes the per-group Arrow
-    round-trip + task overhead when models are tiny (see
-    :func:`solve_packed`'s batch_models)."""
-    return pd.concat(
-        [_solve_one_model(g) for _, g in pdf.groupby("model_name", sort=False)],
-        ignore_index=True,
-    )
 
 
 def _solve_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -22,8 +22,9 @@ Spark-design note: models here are KB-scale (≤34 vars in the reference's
 own examples) so mutation happens on the driver under a ``threading.Lock``,
 exactly paralleling the reference's single-process mutex. The scale path —
 thousands of models defined relationally as DataFrames — lives in
-:mod:`highs_duckdb_spark.optim.bulk` and runs each solve as a grouped-map
-pandas-UDF task on executors.
+:mod:`highs_duckdb_spark.optim.bulk`: ``repartition(W, "model_name")`` then
+``mapInPandas``, so each executor task assembles and solves the models of
+one hash bucket.
 """
 
 from __future__ import annotations

@@ -252,22 +252,18 @@ def read_table_arrow(
     return t
 
 
-def ensure_shipped(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers via ``addPyFile``.
-
-    Required before any pandas-UDF / applyInPandas stage: cloudpickle
-    serializes module-level kernels by reference, so executors must be able
-    to import ``highs_duckdb_spark`` even when the driver process found it
-    through a cwd/sys.path entry the workers don't share.
-    """
-    sc = spark.sparkContext
-    if getattr(sc, "_highs_duckdb_spark_shipped", False):
-        return
+def _package_zip() -> str:
+    """Zip this package's ``.py`` files into a fresh temporary directory,
+    removed when the interpreter exits; returns the zip's path."""
+    import atexit
+    import shutil
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.mkdtemp(prefix="hds_pyfiles_"), "highs_duckdb_spark.zip")
+    zdir = tempfile.mkdtemp(prefix="hds_pyfiles_")
+    atexit.register(shutil.rmtree, zdir, ignore_errors=True)
+    zpath = os.path.join(zdir, "highs_duckdb_spark.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -277,8 +273,38 @@ def ensure_shipped(spark: SparkSession) -> None:
                         "highs_duckdb_spark", os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
+    return zpath
+
+
+def ensure_shipped(spark: SparkSession) -> None:
+    """Ship this package to executor Python workers via ``addPyFile``.
+
+    Required before any pandas-UDF / applyInPandas stage: cloudpickle
+    serializes module-level kernels by reference, so executors must be able
+    to import ``highs_duckdb_spark`` even when the driver process found it
+    through a cwd/sys.path entry the workers don't share.
+
+    The zip's directory lives as long as the SparkContext (executors fetch
+    the file from it) and is removed when the context stops or the
+    interpreter exits, whichever comes first.
+    """
+    sc = spark.sparkContext
+    if getattr(sc, "_highs_duckdb_spark_shipped", False):
+        return
+    import shutil
+
+    zpath = _package_zip()
     sc.addPyFile(zpath)
     sc._highs_duckdb_spark_shipped = True
+    stop = sc.stop
+
+    def stop_and_remove_zip() -> None:
+        try:
+            stop()
+        finally:
+            shutil.rmtree(os.path.dirname(zpath), ignore_errors=True)
+
+    sc.stop = stop_and_remove_zip
 
 
 #: reader-DataFrame cache: file listing + footer schema read cost ~100ms per
