@@ -12,9 +12,12 @@ UDTFs evaluate in Python worker processes with no affinity guarantees, so
 model state lives in the file-backed store
 (:mod:`highs_duckdb_spark.optim.udtf_store`): machine-global and
 lock-guarded, preserving the reference's process-global registry semantics
-across whichever workers the statements land on. The driver-side API in
-:mod:`highs_duckdb_spark.optim.registry` is the primary programmatic path;
-the distributed path for real scale is :mod:`highs_duckdb_spark.optim.bulk`.
+across whichever workers the statements land on. Each ``eval`` only loads
+the model and persists it: the rules for building a model and the status
+row of each statement (duplicate and unknown names, insertion-order
+indices, the solve guard) live in :mod:`highs_duckdb_spark.optim.registry`,
+shared with the driver-side API there (the primary programmatic path) and
+the distributed path for real scale, :mod:`highs_duckdb_spark.optim.bulk`.
 
 Cost per statement: each statement is one Spark job running one Python
 task, and nearly all of its time is that task, not Catalyst (~10 ms). On
@@ -38,10 +41,11 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
+from highs_duckdb_spark.optim import registry
 from highs_duckdb_spark.session import ensure_shipped
 
 
-@udtf(returnType="variable_name string, variable_index string, status string")
+@udtf(returnType=registry.VARIABLE_RESULT_SCHEMA)
 class HighsCreateVariablesUDTF:
     def eval(  # noqa: D102
         self,
@@ -55,92 +59,41 @@ class HighsCreateVariablesUDTF:
         from highs_duckdb_spark.optim.udtf_store import locked_model
 
         with locked_model(model_name, create=True) as model:
-            if variable_name in model.variable_indices:
-                msg = f"Variable '{variable_name}' already exists in model '{model_name}'"
-                yield (variable_name, "ERROR", f"ERROR: {msg}")
-                return
-            idx = model.next_var_index
-            model.next_var_index += 1
-            model.variable_indices[variable_name] = idx
-            model.variable_names.append(variable_name)
-            model.obj_coefficients.append(float(obj_coefficient))
-            model.var_lower_bounds.append(float(lower_bound))
-            model.var_upper_bounds.append(float(upper_bound))
-            model.variable_types.append(var_type)
-        yield (variable_name, f"{variable_name}_{idx}", "SUCCESS")
+            row = registry.index_row(
+                model.add_variable, model_name, variable_name,
+                lower_bound, upper_bound, obj_coefficient, var_type,
+            )
+        yield row
 
 
-@udtf(returnType="constraint_name string, constraint_index string, status string")
+@udtf(returnType=registry.CONSTRAINT_RESULT_SCHEMA)
 class HighsCreateConstraintsUDTF:
     def eval(self, model_name: str, constraint_name: str, lower_bound: float, upper_bound: float):  # noqa: D102
         from highs_duckdb_spark.optim.udtf_store import locked_model
 
         with locked_model(model_name, create=True) as model:
-            if constraint_name in model.constraint_indices:
-                msg = f"Constraint '{constraint_name}' already exists in model '{model_name}'"
-                yield (constraint_name, "ERROR", f"ERROR: {msg}")
-                return
-            idx = model.next_constraint_index
-            model.next_constraint_index += 1
-            model.constraint_indices[constraint_name] = idx
-            model.constraint_names.append(constraint_name)
-            model.constraint_lower_bounds.append(float(lower_bound))
-            model.constraint_upper_bounds.append(float(upper_bound))
-            model.constraint_coefficients.setdefault(idx, [])
-        yield (constraint_name, f"{constraint_name}_{idx}", "SUCCESS")
+            row = registry.index_row(model.add_constraint, model_name, constraint_name, lower_bound, upper_bound)
+        yield row
 
 
-@udtf(
-    returnType="constraint_name string, variable_name string, coefficient double, status string"
-)
+@udtf(returnType=registry.COEFFICIENT_RESULT_SCHEMA)
 class HighsSetCoefficientsUDTF:
     def eval(self, model_name: str, constraint_name: str, variable_name: str, coefficient: float):  # noqa: D102
         from highs_duckdb_spark.optim.udtf_store import locked_model
 
         with locked_model(model_name, create=False) as model:
-            if model is None:
-                yield (
-                    constraint_name,
-                    variable_name,
-                    float(coefficient),
-                    f"ERROR: Model '{model_name}' not found",
-                )
-                return
-            if variable_name not in model.variable_indices:
-                msg = f"Variable '{variable_name}' not found in model '{model_name}'"
-                yield (constraint_name, variable_name, float(coefficient), f"ERROR: {msg}")
-                return
-            if constraint_name not in model.constraint_indices:
-                msg = f"Constraint '{constraint_name}' not found in model '{model_name}'"
-                yield (constraint_name, variable_name, float(coefficient), f"ERROR: {msg}")
-                return
-            model.constraint_coefficients.setdefault(
-                model.constraint_indices[constraint_name], []
-            ).append((model.variable_indices[variable_name], float(coefficient)))
-        yield (constraint_name, variable_name, float(coefficient), "SUCCESS")
+            row = registry.coefficient_row(model, model_name, constraint_name, variable_name, coefficient)
+        yield row
 
 
-@udtf(
-    returnType=(
-        "variable_name string, variable_index string, solution_value double, "
-        "reduced_cost double, status string"
-    )
-)
+@udtf(returnType=registry.SOLVE_RESULT_SCHEMA)
 class HighsSolveUDTF:
     def eval(self, model_name: str):  # noqa: D102
-        from highs_duckdb_spark.optim.registry import solve_model_info
         from highs_duckdb_spark.optim.udtf_store import locked_model
 
         with locked_model(model_name, create=False, readonly=True) as model:
-            if model is None:
-                yield ("N/A", "ERROR", 0.0, 0.0, f"ERROR: Model '{model_name}' not found")
-                return
-            try:
-                rows = solve_model_info(model)
-            except Exception as e:
-                rows = [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")]
-        for row in rows:
-            yield row
+            rows = registry.solve_rows(model, model_name)
+        yield from rows
 
 
 @udtf(returnType="model_name string, status string")

@@ -225,8 +225,7 @@ def opt05_solve_many_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _opt05_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """opt05's model assembly alone (exposed for the decomposition probe,
-    tools/opt05_decompose.py): the three model tables assembled directly
+    """opt05's model assembly alone: the three model tables assembled directly
     into the solver's packed long form in ONE SQL statement — the union's
     three copies of the customer agg share one map-side execution via
     Spark's ReuseExchange rule, and a single spark.sql call keeps

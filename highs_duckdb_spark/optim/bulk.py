@@ -35,7 +35,7 @@ from chained ``F.lit(...).cast(...).alias(...)`` projections and two
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator, Sequence
+from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from highs_duckdb_spark.session import ensure_shipped
-from highs_duckdb_spark.optim.registry import HighsModelInfo, solve_model_info
+from highs_duckdb_spark.optim.registry import HighsModelInfo, ModelError, solve_error_row, solve_rows
 
 #: ``"model_name string, " + registry.SOLVE_RESULT_SCHEMA``, built in Python
 #: so that no call parses it through the JVM
@@ -114,10 +114,12 @@ def _in_order(rows: list[int], ords: list, names: list) -> list[int]:
     return sorted(rows, key=name_key)
 
 
-def _solve_groups(pdf: pd.DataFrame, groups: Iterable[Sequence[int]]) -> pd.DataFrame:
-    """Packed rows (see :func:`_pack`) → BULK_RESULT_SCHEMA rows, one model
-    per group of row positions, in group order. Errors are data: a model
-    that cannot be built or solved yields one ERROR row, never an
+def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Packed rows (see :func:`_pack`) of SEVERAL models (one hash bucket
+    of model_names) → their BULK_RESULT_SCHEMA rows, models in
+    first-appearance order. Rows with a null model_name belong to no model
+    and are skipped, as a pandas ``groupby`` would. Errors are data: a
+    model that cannot be built or solved yields one ERROR row, never an
     exception out of the task (an empty frame would also fail Spark's
     schema check)."""
     model, kind, name, name2, lb, ub, obj, vtype, coef, ords = (
@@ -127,87 +129,38 @@ def _solve_groups(pdf: pd.DataFrame, groups: Iterable[Sequence[int]]) -> pd.Data
             "upper_bound", "obj", "vtype", "coefficient", "ord",
         )
     )
+    groups: dict[object, list[int]] = {}
+    for i, m in enumerate(model):
+        if not _isnull(m):
+            groups.setdefault(m, []).append(i)
     out: tuple[list, ...] = ([], [], [], [], [], [])
 
-    def emit(model_name, rows: list[tuple]) -> None:
-        out[0].extend([model_name] * len(rows))
-        for col, values in zip(out[1:], zip(*rows)):
-            col.extend(values)
-
-    def build(model_name, rows: Sequence[int]) -> HighsModelInfo | str:
-        """The model, or the message of its ERROR row."""
+    def build(model_name, rows: list[int]) -> HighsModelInfo:
+        """The model, built by the registry's rules; raises ModelError."""
         by_kind: dict[str, list[int]] = {_KIND_VAR: [], _KIND_CON: [], _KIND_COEF: []}
         for i in rows:
             if kind[i] in by_kind:
                 by_kind[kind[i]].append(i)
         if not by_kind[_KIND_VAR]:
-            return "model has no variables"
+            raise ModelError("model has no variables")
         info = HighsModelInfo()
         for i in _in_order(by_kind[_KIND_VAR], ords, name):
-            if name[i] in info.variable_indices:
-                # registry-path parity: duplicate names are an ERROR row, not a
-                # silently malformed LP (reference: src/highs_extension.cpp:177-182)
-                return f"Variable '{name[i]}' already exists in model '{model_name}'"
-            info.variable_indices[name[i]] = info.next_var_index
-            info.next_var_index += 1
-            info.variable_names.append(name[i])
-            info.obj_coefficients.append(float(obj[i]))
-            info.var_lower_bounds.append(float(lb[i]))
-            info.var_upper_bounds.append(float(ub[i]))
-            info.variable_types.append(vtype[i])
+            info.add_variable(model_name, name[i], lb[i], ub[i], obj[i], vtype[i])
         for i in _in_order(by_kind[_KIND_CON], ords, name):
-            if name[i] in info.constraint_indices:
-                return f"Constraint '{name[i]}' already exists in model '{model_name}'"
-            idx = info.next_constraint_index
-            info.next_constraint_index += 1
-            info.constraint_indices[name[i]] = idx
-            info.constraint_names.append(name[i])
-            info.constraint_lower_bounds.append(float(lb[i]))
-            info.constraint_upper_bounds.append(float(ub[i]))
-            info.constraint_coefficients[idx] = []
+            info.add_constraint(model_name, name[i], lb[i], ub[i])
         for i in by_kind[_KIND_COEF]:
-            ci = info.constraint_indices.get(name[i])
-            vi = info.variable_indices.get(name2[i])
-            if ci is None or vi is None:
-                return (
-                    f"unknown constraint '{name[i]}'"
-                    if ci is None
-                    else f"unknown variable '{name2[i]}'"
-                )
-            info.constraint_coefficients[ci].append((vi, float(coef[i])))
+            info.add_coefficient(model_name, name[i], name2[i], coef[i])
         return info
 
-    for rows in groups:
-        model_name = model[rows[0]]
-        info = build(model_name, rows)
-        if isinstance(info, str):
-            emit(model_name, [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {info}")])
-            continue
+    for model_name, rows in groups.items():
         try:
-            emit(model_name, solve_model_info(info))
-        except Exception as e:  # error-as-data, matching the reference contract
-            emit(model_name, [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")])
+            solved = solve_rows(build(model_name, rows), model_name)
+        except ModelError as e:
+            solved = [solve_error_row(e)]
+        out[0].extend([model_name] * len(solved))
+        for col, values in zip(out[1:], zip(*solved)):
+            col.extend(values)
     return pd.DataFrame(dict(zip(BULK_RESULT_SCHEMA.names, out)))
-
-
-def _solve_one_model(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped-map kernel (``batch_models=False``): rows of ONE model →
-    its solution rows."""
-    return _solve_groups(pdf, [range(len(pdf))])
-
-
-def _solve_model_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Batched kernel: rows of SEVERAL models (one hash bucket of
-    model_names) → their solution rows, models in first-appearance order.
-    Rows with a null model_name belong to no model and are skipped, as a
-    pandas ``groupby`` would. Batching amortizes the per-group Arrow
-    round-trip + task overhead when models are tiny (see
-    :func:`solve_packed`'s batch_models)."""
-    groups: dict[object, list[int]] = {}
-    for i, m in enumerate(pdf["model_name"].tolist()):
-        if not _isnull(m):
-            groups.setdefault(m, []).append(i)
-    return _solve_groups(pdf, groups.values())
 
 
 def solve_many(
@@ -220,7 +173,8 @@ def solve_many(
     One shuffle on ``model_name``; each model solves independently inside
     one pandas-UDF task (see :func:`solve_packed`). Output:
     BULK_RESULT_SCHEMA, one row per variable per model (plus error rows per
-    the status contract).
+    the status contract). Rows whose model_name is null belong to no model
+    and are dropped.
     """
     return solve_packed(_pack(variables_df, constraints_df, coefficients_df))
 
@@ -232,32 +186,24 @@ def _solve_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield _solve_model_batch(pd.concat(frames, ignore_index=True))
 
 
-def solve_packed(packed: DataFrame, batch_models: bool = True) -> DataFrame:
+def solve_packed(packed: DataFrame) -> DataFrame:
     """Solve models already in the packed long form (see :func:`_pack`).
 
     Callers that assemble the long frame themselves (e.g. in one SQL
     statement) skip ``_pack``'s per-table projections. Expected columns:
     model_name, kind ('v'|'c'|'k'), name, name2, lower_bound, upper_bound,
-    obj, vtype, coefficient, ord.
+    obj, vtype, coefficient, ord. Rows whose model_name is null belong to
+    no model and are dropped.
 
-    ``batch_models`` (the default): one pandas task per hash bucket of
-    model_name, W = defaultParallelism buckets, so a 10k-model workload
-    fans out across every core while the task count stays at the core
-    count. ``repartition(W, "model_name")`` already places each row in
-    partition ``pmod(hash(model_name), W)`` (Spark's hash partitioner is
-    Murmur3 with seed 42, the same as ``F.hash``), so each partition IS a
-    bucket and ``mapInPandas`` solves it in one call. An earlier layout
-    computed that bucket as a column and then repartitioned BY the bucket,
-    hashing it a second time: buckets collided, and at W = 2 / 4 / 8 / 32
-    only 1 / 2 / 5 / 18 partitions held any models. The 0.78× of per-model
-    measured for that layout at sf100 (benchruns/opt05_decompose_sf100.txt)
-    ran on about half the cores.
-
-    ``batch_models=False`` gives one pandas group per model — preferable
-    only when model count is near the core count AND model sizes are
-    wildly uneven (hash-bucketing can pair two big models on one core
-    while others idle; with many tiny models batching is a pure overhead
-    win).
+    One pandas task per hash bucket of model_name, W = defaultParallelism
+    buckets, so a 10k-model workload fans out across every core while the
+    task count stays at the core count. ``repartition(W, "model_name")``
+    already places each row in partition ``pmod(hash(model_name), W)``
+    (Spark's hash partitioner is Murmur3 with seed 42, the same as
+    ``F.hash``), so each partition IS a bucket and ``mapInPandas`` solves
+    it in one call. Computing that bucket as a column and repartitioning
+    BY it would hash it a second time and let buckets collide: at W = 2 /
+    4 / 8 / 32 only 1 / 2 / 5 / 18 partitions held any models.
     """
     spark = packed.sparkSession
     ensure_shipped(spark)
@@ -265,13 +211,9 @@ def solve_packed(packed: DataFrame, batch_models: bool = True) -> DataFrame:
     # instead of inheriting spark.sql.shuffle.partitions (often tuned low
     # for tiny exchange stages — e.g. the latency bench uses 2, which would
     # serialize 200 solves onto 2 workers). A repartition with an explicit
-    # count is never coalesced by AQE; on the per-model path it also
-    # satisfies applyInPandas' clustering requirement, so no second
-    # exchange is added.
+    # count is never coalesced by AQE.
     spread = packed.repartition(spark.sparkContext.defaultParallelism, "model_name")
-    if batch_models:
-        return spread.mapInPandas(_solve_partition, BULK_RESULT_SCHEMA)
-    return spread.groupBy("model_name").applyInPandas(_solve_one_model, BULK_RESULT_SCHEMA)
+    return spread.mapInPandas(_solve_partition, BULK_RESULT_SCHEMA)
 
 
 def solve_from_tables(

@@ -18,6 +18,13 @@ Mirrors the reference's process-global, mutex-guarded registry
   insertion order, with ``binary`` bounds clamped to [0,1]
   (reference: src/highs_extension.cpp:574-584).
 
+These rules live here once. :class:`HighsModelInfo`'s ``add_*`` methods
+build a model and raise :class:`ModelError` with the reference's message;
+``index_row`` / ``coefficient_row`` / ``solve_rows`` turn one statement
+into its status rows. The Python API below, the SQL table functions
+(:mod:`highs_duckdb_spark.functions.udtf`) and the bulk assembler
+(:mod:`highs_duckdb_spark.optim.bulk`) all call them.
+
 Spark-design note: models here are KB-scale (≤34 vars in the reference's
 own examples) so mutation happens on the driver under a ``threading.Lock``,
 exactly paralleling the reference's single-process mutex. The scale path —
@@ -55,6 +62,11 @@ SOLVE_RESULT_SCHEMA = (
 )
 
 
+class ModelError(Exception):
+    """A statement the model's rules reject; ``str(e)`` is the reference's
+    message, reported as the status row ``ERROR: <message>``."""
+
+
 @dataclass
 class HighsModelInfo:
     """Per-model mutable state (reference: src/highs_extension.cpp:26-44)."""
@@ -74,6 +86,45 @@ class HighsModelInfo:
     next_var_index: int = 0
     next_constraint_index: int = 0
     # objective sense is hard-coded to minimize (reference: src/highs_extension.cpp:43)
+
+    def add_variable(self, model_name: str, name: str, lb, ub, obj, vtype: str) -> int:
+        """Append a variable; its index (reference: src/highs_extension.cpp:157-263)."""
+        if name in self.variable_indices:
+            raise ModelError(f"Variable '{name}' already exists in model '{model_name}'")
+        idx = self.next_var_index
+        self.next_var_index += 1
+        self.variable_indices[name] = idx
+        self.variable_names.append(name)
+        self.obj_coefficients.append(float(obj))
+        self.var_lower_bounds.append(float(lb))
+        self.var_upper_bounds.append(float(ub))
+        self.variable_types.append(vtype)
+        return idx
+
+    def add_constraint(self, model_name: str, name: str, lb, ub) -> int:
+        """Append a range constraint lb ≤ a·x ≤ ub; its index
+        (reference: src/highs_extension.cpp:266-373)."""
+        if name in self.constraint_indices:
+            raise ModelError(f"Constraint '{name}' already exists in model '{model_name}'")
+        idx = self.next_constraint_index
+        self.next_constraint_index += 1
+        self.constraint_indices[name] = idx
+        self.constraint_names.append(name)
+        self.constraint_lower_bounds.append(float(lb))
+        self.constraint_upper_bounds.append(float(ub))
+        self.constraint_coefficients.setdefault(idx, [])
+        return idx
+
+    def add_coefficient(self, model_name: str, constraint: str, variable: str, coef) -> None:
+        """Append a (constraint, variable) coefficient without dedup, like
+        the reference (reference: src/highs_extension.cpp:376-507)."""
+        var_idx = self.variable_indices.get(variable)
+        if var_idx is None:
+            raise ModelError(f"Variable '{variable}' not found in model '{model_name}'")
+        con_idx = self.constraint_indices.get(constraint)
+        if con_idx is None:
+            raise ModelError(f"Constraint '{constraint}' not found in model '{model_name}'")
+        self.constraint_coefficients.setdefault(con_idx, []).append((var_idx, float(coef)))
 
 
 class ModelRegistry:
@@ -130,6 +181,32 @@ def highs_openssl_version(name: str) -> str:
     return f"Hello {name}, the HiGHS extension is running with OpenSSL version: {ssl.OPENSSL_VERSION}"
 
 
+def index_row(add, model_name: str, name: str, *values) -> tuple:
+    """Run one create statement, ``add(model_name, name, *values)`` with
+    ``add`` a model's :meth:`~HighsModelInfo.add_variable` or
+    :meth:`~HighsModelInfo.add_constraint` → its status row
+    (VARIABLE_RESULT_SCHEMA / CONSTRAINT_RESULT_SCHEMA)."""
+    try:
+        idx = add(model_name, name, *values)
+    except ModelError as e:
+        return (name, "ERROR", f"ERROR: {e}")
+    return (name, f"{name}_{idx}", "SUCCESS")
+
+
+def coefficient_row(model: HighsModelInfo | None, model_name: str, constraint_name: str,
+                    variable_name: str, coefficient) -> tuple:
+    """Add a coefficient to ``model`` (None: the model does not exist) →
+    its status row (COEFFICIENT_RESULT_SCHEMA)."""
+    status = "SUCCESS"
+    try:
+        if model is None:
+            raise ModelError(f"Model '{model_name}' not found")
+        model.add_coefficient(model_name, constraint_name, variable_name, coefficient)
+    except ModelError as e:
+        status = f"ERROR: {e}"
+    return (constraint_name, variable_name, float(coefficient), status)
+
+
 def create_variables(
     spark: SparkSession,
     model_name: str,
@@ -144,19 +221,10 @@ def create_variables(
     registry = ModelRegistry.instance()
     with registry.mutation_lock:
         model = registry.get_or_create_model(model_name)
-        if variable_name in model.variable_indices:
-            msg = f"Variable '{variable_name}' already exists in model '{model_name}'"
-            row = (variable_name, "ERROR", f"ERROR: {msg}")
-        else:
-            var_index = model.next_var_index
-            model.next_var_index += 1
-            model.variable_indices[variable_name] = var_index
-            model.variable_names.append(variable_name)
-            model.obj_coefficients.append(float(obj_coefficient))
-            model.var_lower_bounds.append(float(lower_bound))
-            model.var_upper_bounds.append(float(upper_bound))
-            model.variable_types.append(var_type)
-            row = (variable_name, f"{variable_name}_{var_index}", "SUCCESS")
+        row = index_row(
+            model.add_variable, model_name, variable_name,
+            lower_bound, upper_bound, obj_coefficient, var_type,
+        )
     return local_rows_df(spark, [row], VARIABLE_RESULT_SCHEMA)
 
 
@@ -172,18 +240,7 @@ def create_constraints(
     registry = ModelRegistry.instance()
     with registry.mutation_lock:
         model = registry.get_or_create_model(model_name)
-        if constraint_name in model.constraint_indices:
-            msg = f"Constraint '{constraint_name}' already exists in model '{model_name}'"
-            row = (constraint_name, "ERROR", f"ERROR: {msg}")
-        else:
-            idx = model.next_constraint_index
-            model.next_constraint_index += 1
-            model.constraint_indices[constraint_name] = idx
-            model.constraint_names.append(constraint_name)
-            model.constraint_lower_bounds.append(float(lower_bound))
-            model.constraint_upper_bounds.append(float(upper_bound))
-            model.constraint_coefficients.setdefault(idx, [])
-            row = (constraint_name, f"{constraint_name}_{idx}", "SUCCESS")
+        row = index_row(model.add_constraint, model_name, constraint_name, lower_bound, upper_bound)
     return local_rows_df(spark, [row], CONSTRAINT_RESULT_SCHEMA)
 
 
@@ -198,24 +255,10 @@ def set_coefficients(
     like the reference (reference: src/highs_extension.cpp:376-507)."""
     registry = ModelRegistry.instance()
     with registry.mutation_lock:
-        model = registry.get_model(model_name)
-        if model is None:
-            status = f"ERROR: Model '{model_name}' not found"
-            row = (constraint_name, variable_name, float(coefficient), status)
-            return local_rows_df(spark, [row], COEFFICIENT_RESULT_SCHEMA)
-        if variable_name not in model.variable_indices:
-            msg = f"Variable '{variable_name}' not found in model '{model_name}'"
-            row = (constraint_name, variable_name, float(coefficient), f"ERROR: {msg}")
-        elif constraint_name not in model.constraint_indices:
-            msg = f"Constraint '{constraint_name}' not found in model '{model_name}'"
-            row = (constraint_name, variable_name, float(coefficient), f"ERROR: {msg}")
-        else:
-            var_idx = model.variable_indices[variable_name]
-            con_idx = model.constraint_indices[constraint_name]
-            model.constraint_coefficients.setdefault(con_idx, []).append(
-                (var_idx, float(coefficient))
-            )
-            row = (constraint_name, variable_name, float(coefficient), "SUCCESS")
+        row = coefficient_row(
+            registry.get_model(model_name), model_name, constraint_name, variable_name,
+            coefficient,
+        )
     return local_rows_df(spark, [row], COEFFICIENT_RESULT_SCHEMA)
 
 
@@ -270,6 +313,24 @@ def solve_model_info(model: HighsModelInfo) -> list[tuple[str, str, float, float
     return rows
 
 
+def solve_error_row(message) -> tuple:
+    """The one row a solve reports in place of a solution."""
+    return ("N/A", "ERROR", 0.0, 0.0, f"ERROR: {message}")
+
+
+def solve_rows(
+    model: HighsModelInfo | None, model_name: str, solver=solve_model_info
+) -> list[tuple]:
+    """Solve ``model`` (None: the model does not exist) with ``solver`` →
+    its rows, errors as data."""
+    if model is None:
+        return [solve_error_row(f"Model '{model_name}' not found")]
+    try:
+        return solver(model)
+    except Exception as e:  # error-as-data contract
+        return [solve_error_row(e)]
+
+
 def solve(spark: SparkSession, model_name: str) -> DataFrame:
     """Solve a registry model → one row per variable
     (reference: src/highs_extension.cpp:512-722).
@@ -279,14 +340,7 @@ def solve(spark: SparkSession, model_name: str) -> DataFrame:
     """
     registry = ModelRegistry.instance()
     with registry.mutation_lock:  # stable snapshot of the model while solving
-        model = registry.get_model(model_name)
-        if model is None:
-            row = ("N/A", "ERROR", 0.0, 0.0, f"ERROR: Model '{model_name}' not found")
-            return local_rows_df(spark, [row], SOLVE_RESULT_SCHEMA)
-        try:
-            rows = solve_model_info(model)
-        except Exception as e:  # error-as-data contract
-            rows = [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")]
+        rows = solve_rows(registry.get_model(model_name), model_name)
     return local_rows_df(spark, rows, SOLVE_RESULT_SCHEMA)
 
 
@@ -330,12 +384,5 @@ def solve_duals(spark: SparkSession, model_name: str) -> DataFrame:
     """Shadow-price report for a registry model: one row per constraint."""
     registry = ModelRegistry.instance()
     with registry.mutation_lock:
-        model = registry.get_model(model_name)
-        if model is None:
-            row = ("N/A", "ERROR", 0.0, 0.0, f"ERROR: Model '{model_name}' not found")
-            return local_rows_df(spark, [row], DUALS_RESULT_SCHEMA)
-        try:
-            rows = solve_model_duals(model)
-        except Exception as e:  # error-as-data contract
-            rows = [("N/A", "ERROR", 0.0, 0.0, f"ERROR: {e}")]
+        rows = solve_rows(registry.get_model(model_name), model_name, solve_model_duals)
     return local_rows_df(spark, rows, DUALS_RESULT_SCHEMA)

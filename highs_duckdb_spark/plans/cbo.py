@@ -91,7 +91,7 @@ BROADCAST_CAP_BYTES = int(os.environ.get("HDS_BROADCAST_CAP_BYTES", str(256 << 2
 #: this many input rows per pre-aggregated group (the rewrite's benefit is
 #: exactly that factor off the join's shuffle volume; below ~2 the extra
 #: aggregate costs more than it saves).
-EAGER_AGG_MIN_REDUCTION = float(os.environ.get("HDS_EAGER_AGG_MIN_REDUCTION", "2.0"))
+EAGER_AGG_MIN_REDUCTION = 2.0
 
 #: ... and only when the carrier fact is at least this big: the rewrite's
 #: RATIO benefit scales with data while its plan-construction cost (extra
@@ -101,13 +101,13 @@ EAGER_AGG_MIN_REDUCTION = float(os.environ.get("HDS_EAGER_AGG_MIN_REDUCTION", "2
 #: rewrite costs +28% of q11's floor-dominated wall time; at sf10/sf100 it
 #: pays −16/−45%. 32 MB sits an order of magnitude above the break-even's
 #: noisy side.
-EAGER_AGG_MIN_BYTES = int(os.environ.get("HDS_EAGER_AGG_MIN_BYTES", str(32 << 20)))
+EAGER_AGG_MIN_BYTES = 32 << 20
 
 #: aggregate functions the eager rewrite can decompose into a
 #: partial-below-the-join / combine-above-the-join pair
 _DECOMPOSABLE = ("sum", "count", "min", "max", "avg")
 
-# --- runtime-filter knobs (broadcast semi-join reduction; VERDICT r08 item 2)
+# --- runtime-filter gates (broadcast semi-join reduction; VERDICT r08 item 2)
 
 #: A runtime filter fires only when the estimated probe bytes it removes
 #: clear this floor: the filter's ratio benefit scales with data while its
@@ -115,16 +115,16 @@ _DECOMPOSABLE = ("sum", "count", "min", "max", "avg")
 #: absolute-benefit reasoning as EAGER_AGG_MIN_BYTES. 64 MB keeps the
 #: sf0.1 plan floor untouched (largest sf0.1 candidate ≈ 60 MB) and fires
 #: from sf10 up.
-RF_MIN_BENEFIT_BYTES = int(os.environ.get("HDS_RF_MIN_BENEFIT_BYTES", str(64 << 20)))
+RF_MIN_BENEFIT_BYTES = 64 << 20
 #: ... and only when the saved probe bytes also clear this multiple of the
 #: estimated build-pass cost (a column-pruned scan of the build side).
-RF_BENEFIT_MARGIN = float(os.environ.get("HDS_RF_BENEFIT_MARGIN", "2.0"))
+RF_BENEFIT_MARGIN = 2.0
 #: fraction of the build side's RAW table bytes one key-column build pass
 #: is charged (key + filter columns of a ~10-column table)
-RF_BUILD_COST_FACTOR = float(os.environ.get("HDS_RF_BUILD_COST_FACTOR", "0.1"))
+RF_BUILD_COST_FACTOR = 0.1
 #: build sides with declared selectivity at/above this can't reduce the
 #: probe enough to matter (the pass rate IS the key fraction ≈ sel)
-RF_MAX_BUILD_SEL = float(os.environ.get("HDS_RF_MAX_BUILD_SEL", "0.5"))
+RF_MAX_BUILD_SEL = 0.5
 #: budget for the build side's broadcast KEY SET — the filter here is the
 #: exact key set (broadcast left-semi, zero false positives), so every
 #: probe row pays one hash-map lookup against it: past ~L3 size the map
@@ -135,15 +135,15 @@ RF_MAX_BUILD_SEL = float(os.environ.get("HDS_RF_MAX_BUILD_SEL", "0.5"))
 #: the first class and declines the second ("keys_overflow" — where only
 #: an engine-internal bloom like DuckDB's or Spark's 10 GiB+
 #: InjectRuntimeFilter can still play).
-RF_MAX_KEY_BYTES = int(os.environ.get("HDS_RF_MAX_KEY_BYTES", str(32 << 20)))
+RF_MAX_KEY_BYTES = 32 << 20
 #: charged bytes per broadcast key (8-byte key + hash-set overhead)
 RF_KEY_BYTES = 16
 #: a broadcast byte is also charged this multiple of a shuffled byte: the
 #: key set replicates to EVERY executor (design scale: hundreds) while a
 #: shuffled byte moves once — the second half of the same A/B split.
-RF_BROADCAST_COST_MULT = float(os.environ.get("HDS_RF_BROADCAST_COST_MULT", "25"))
+RF_BROADCAST_COST_MULT = 25.0
 
-# --- co-clustered dim demotion knobs (VERDICT r09 item 1) ------------------
+# --- co-clustered dim demotion gates (VERDICT r09 item 1) ------------------
 
 #: Demote a would-be-broadcast dim to a bucket-aligned shuffled-hash join
 #: only when its estimated BROADCAST build map exceeds this budget: past
@@ -169,7 +169,7 @@ COCLUSTER_MIN_BUILD_BYTES = int(
 )
 #: charged bytes per broadcast-map row (key + a couple of payload columns
 #: + HashedRelation overhead)
-COCLUSTER_ROW_BYTES = float(os.environ.get("HDS_COCLUSTER_ROW_BYTES", "48"))
+COCLUSTER_ROW_BYTES = 48.0
 
 
 def table_card(sf_dir: str, table: str) -> tuple[float | None, dict[str, float]]:
@@ -1729,7 +1729,7 @@ class JoinGraph:
           WITHOUT a match and are never filterable.
 
         Fire/decline is cost-based from the same catalog statistics the
-        rest of the planner ranks with (RF_* knobs); declines land in
+        rest of the planner ranks with (RF_* gates); declines land in
         ``explain.rf_declines``. Capture-mode plans skip the pass so the
         advisor records the DECLARED graph."""
         self._rf_applied = []

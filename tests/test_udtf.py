@@ -118,3 +118,50 @@ def test_remove_model_udtf(spark):
     spark.sql("SELECT * FROM highs_remove_model('udtf_rm')").collect()
     miss = spark.sql("SELECT * FROM highs_remove_model('udtf_rm')").collect()
     assert miss[0].status.startswith("ERROR: Model 'udtf_rm' not found")
+
+
+#: one statement script: (statement, args) with the Python API's argument order
+_PARITY_SCRIPT = [
+    ("create_variables", ("parity_m", "x", 0.0, 1e30, 1.0, "continuous")),
+    ("create_variables", ("parity_m", "y", 1.0, 1e30, 1.0, "continuous")),
+    ("create_variables", ("parity_m", "x", 0.0, 2.0, 1.0, "continuous")),  # duplicate
+    ("create_constraints", ("parity_m", "c1", -1e30, 7.0)),
+    ("create_constraints", ("parity_m", "c2", -1e30, 9.0)),
+    ("create_constraints", ("parity_m", "c1", -1e30, 1.0)),  # duplicate
+    ("set_coefficients", ("parity_m", "c1", "x", 1.0)),
+    ("set_coefficients", ("parity_m", "c1", "y", 2.0)),
+    ("set_coefficients", ("parity_m", "c2", "x", 3.0)),
+    ("set_coefficients", ("parity_m", "c2", "y", 1.0)),
+    ("set_coefficients", ("parity_m", "c1", "ghost", 1.0)),  # unknown variable
+    ("set_coefficients", ("parity_m", "ghost", "x", 1.0)),  # unknown constraint
+    ("set_coefficients", ("parity_m", "ghost", "ghost", 1.0)),  # both: variable first
+    ("set_coefficients", ("parity_missing", "c1", "x", 1.0)),  # no such model
+    ("solve", ("parity_missing",)),
+    ("solve", ("parity_m",)),
+]
+
+
+def test_python_api_and_sql_table_functions_give_identical_rows(sql, spark):
+    """The same statement script through the driver-side API and through
+    spark.sql over the table functions gives the same rows, error rows
+    included."""
+    from highs_duckdb_spark.optim import registry, udtf_store
+
+    for name in ("parity_m", "parity_missing"):
+        registry.ModelRegistry.instance().remove_model(name)
+        udtf_store.remove_model(name)
+
+    def literal(a):
+        return f"'{a}'" if isinstance(a, str) else repr(a)
+
+    api, table_functions = [], []
+    for statement, args in _PARITY_SCRIPT:
+        api.append([tuple(r) for r in getattr(registry, statement)(spark, *args).collect()])
+        rows = sql(f"SELECT * FROM highs_{statement}({', '.join(map(literal, args))})")
+        table_functions.append([tuple(r) for r in rows])
+    assert api == table_functions
+    assert api[2][0][2] == "ERROR: Variable 'x' already exists in model 'parity_m'"
+    assert api[12][0][3] == "ERROR: Variable 'ghost' not found in model 'parity_m'"
+    assert api[-2] == [("N/A", "ERROR", 0.0, 0.0, "ERROR: Model 'parity_missing' not found")]
+    assert api[-1] == [("x", "x_0", 0.0, 1.0, "Optimal"), ("y", "y_1", 1.0, 1.0, "Optimal")]
+    registry.ModelRegistry.instance().remove_model("parity_m")
