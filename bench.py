@@ -321,6 +321,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
+                "master": spark.sparkContext.master,
+                "cpus": cpus,
             }
         )
     )

@@ -27,7 +27,10 @@ every task's start, and that re-read the directory of every zip on the
 worker's ``sys.path`` (``pyspark.zip`` once per subpackage, the spark-core
 jar, this package's shipped zip). The package's import hook
 (:mod:`highs_duckdb_spark._worker`) makes it re-read only archives that
-changed, which leaves ~0.12 s per statement on a 4-core host.
+changed, which left ~0.1 s per statement on a 4-core host, ~40 ms of it a
+delayed-ACK stall on the TCP loopback socket between the JVM and the
+worker. ``session.get_spark`` moves that traffic onto Unix domain
+sockets, which leaves ~0.06 s (a one-task job with no Python: ~0.04 s).
 
 Caveat (inherent to side-effecting table functions): a Spark task retry or
 speculative duplicate re-executes ``eval`` — a create that already persisted
@@ -114,7 +117,7 @@ class HighsRemoveModelUDTF:
         if remove_model_checked(model_name):
             yield (model_name, "SUCCESS")
         else:
-            yield (model_name, f"ERROR: Model '{model_name}' not found")
+            yield (model_name, f"ERROR: {registry.model_not_found(model_name)}")
 
 
 def register_table_functions(spark: SparkSession) -> None:

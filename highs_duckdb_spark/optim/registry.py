@@ -67,6 +67,11 @@ class ModelError(Exception):
     message, reported as the status row ``ERROR: <message>``."""
 
 
+def model_not_found(model_name: str) -> str:
+    """The reference's message for a statement on a model that does not exist."""
+    return f"Model '{model_name}' not found"
+
+
 @dataclass
 class HighsModelInfo:
     """Per-model mutable state (reference: src/highs_extension.cpp:26-44)."""
@@ -200,7 +205,7 @@ def coefficient_row(model: HighsModelInfo | None, model_name: str, constraint_na
     status = "SUCCESS"
     try:
         if model is None:
-            raise ModelError(f"Model '{model_name}' not found")
+            raise ModelError(model_not_found(model_name))
         model.add_coefficient(model_name, constraint_name, variable_name, coefficient)
     except ModelError as e:
         status = f"ERROR: {e}"
@@ -291,6 +296,15 @@ def _assemble(model: HighsModelInfo):
     return c, a, row_lb, row_ub, col_lb, col_ub, is_int
 
 
+def _assemble_and_solve(model: HighsModelInfo):
+    """Assemble ``model`` and solve it: as a MILP when any variable is
+    integer or binary, else as an LP → (a, is_mip, result)."""
+    c, a, row_lb, row_ub, col_lb, col_ub, is_int = _assemble(model)
+    if is_int.any():
+        return a, True, solve_milp(c, a, row_lb, row_ub, col_lb, col_ub, is_int)
+    return a, False, solve_lp(c, a, row_lb, row_ub, col_lb, col_ub)
+
+
 def solve_model_info(model: HighsModelInfo) -> list[tuple[str, str, float, float, str]]:
     """Solve one in-memory model → solution rows (plain Python, no Spark).
 
@@ -298,13 +312,7 @@ def solve_model_info(model: HighsModelInfo) -> list[tuple[str, str, float, float
     Row order = variable insertion order (reference:
     src/highs_extension.cpp:669-685).
     """
-    c, a, row_lb, row_ub, col_lb, col_ub, is_int = _assemble(model)
-
-    if is_int.any():
-        res = solve_milp(c, a, row_lb, row_ub, col_lb, col_ub, is_int)
-    else:
-        res = solve_lp(c, a, row_lb, row_ub, col_lb, col_ub)
-
+    _a, _is_mip, res = _assemble_and_solve(model)
     rows = []
     for i, name in enumerate(model.variable_names):
         sol = float(res.x[i]) if res.x.size > i else 0.0
@@ -324,7 +332,7 @@ def solve_rows(
     """Solve ``model`` (None: the model does not exist) with ``solver`` →
     its rows, errors as data."""
     if model is None:
-        return [solve_error_row(f"Model '{model_name}' not found")]
+        return [solve_error_row(model_not_found(model_name))]
     try:
         return solver(model)
     except Exception as e:  # error-as-data contract
@@ -363,14 +371,8 @@ def solve_model_duals(model: HighsModelInfo) -> list[tuple[str, str, float, floa
     backfills reduced costs."""
     n = model.next_var_index
     m = model.next_constraint_index
-    c, a, row_lb, row_ub, col_lb, col_ub, is_int = _assemble(model)
-
-    if is_int.any():
-        res = solve_milp(c, a, row_lb, row_ub, col_lb, col_ub, is_int)
-        duals = np.zeros(m)
-    else:
-        res = solve_lp(c, a, row_lb, row_ub, col_lb, col_ub)
-        duals = res.row_duals if res.row_duals.size == m else np.zeros(m)
+    a, is_mip, res = _assemble_and_solve(model)
+    duals = res.row_duals if not is_mip and res.row_duals.size == m else np.zeros(m)
     activity = a @ res.x if res.x.size == n else np.zeros(m)
     rows = []
     for i, name in enumerate(model.constraint_names):
