@@ -4,7 +4,8 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q01_...": sec, ...}, "sf": 0.1}
+   "queries": {"q01_...": sec, ...}, "sf": 0.1, "master": "local[N]",
+   "cpus": N, "codegen_compiles": <classes compiled in the timed runs>}
 
 Usage:
   python bench.py                 # the headline set
@@ -98,7 +99,11 @@ def main() -> None:
     # cost more than they save at this size — measured ~16.4s -> ~9.4-11.2s
     # over the 15-query set. On a real cluster at 100 TB both stay ON (the
     # session default in session.get_spark): AQE coalescing/skew-splitting
-    # is worth far more than one scheduling round there.
+    # is worth far more than one scheduling round there. Re-measured since
+    # on the library session at sf0.1 on 4 cores (interleaved per query):
+    # sums of medians 5.509 s with this mode vs 5.565 s without, p50 over
+    # all ops 0.295 vs 0.303 s — no gain left. Kept so the figures stay
+    # comparable across rounds.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     # Post-shuffle parallelism and scan split size are ENGINE decisions
@@ -239,7 +244,12 @@ def main() -> None:
     for name in names:
         materialize(QUERIES[name].builder(spark, sf_dir))
 
+    from highs_duckdb_spark.session import codegen_compiles
+
     timings: dict[str, float] = {}
+    # codegen compiles inside the timed runs: 0 when the session's codegen
+    # cache holds the set's classes, hundreds when it thrashes
+    compiles = 0
     for name in names:
         spec = QUERIES[name]
         # One untimed steady-state pass per query (EVERY query, so no query
@@ -250,9 +260,11 @@ def main() -> None:
         materialize(spec.builder(spark, sf_dir))
         runs: list[float] = []
         for _ in range(5):  # best-of-5: host/VM CPU-steal windows of a few seconds are observed; one-off scheduling/GC noise is large vs these runtimes
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             materialize(spec.builder(spark, sf_dir))
             runs.append(time.perf_counter() - t0)
+            compiles += codegen_compiles(spark) - c0
         if debug:
             print(f"{name:32s} {[round(r, 3) for r in runs]}", file=sys.stderr)
         timings[name] = round(min(runs), 3)
@@ -323,6 +335,7 @@ def main() -> None:
                 "sf": sf,
                 "master": spark.sparkContext.master,
                 "cpus": cpus,
+                "codegen_compiles": compiles,
             }
         )
     )

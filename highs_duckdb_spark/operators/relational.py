@@ -40,7 +40,7 @@ from highs_duckdb_spark.functions.presentation import present_sorted
 from highs_duckdb_spark.operators.registry import register
 from highs_duckdb_spark.plans.cbo import JoinGraph
 from highs_duckdb_spark.plans.strategy import fact_join_strategy
-from highs_duckdb_spark.session import load_table, local_rows_df
+from highs_duckdb_spark.session import load_table, local_rows_df, source_schema
 
 # ---------------------------------------------------------------------------
 # Reference-exercised surface (SURVEY.md §2.2)
@@ -1041,7 +1041,9 @@ def q42_topk_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned = load_table(spark, "orders", sf_dir)
     else:
         files, t = zstats.topk_plan(stats, path, "o_totalprice", k, descending=True)
-        pruned = spark.read.parquet(*files)
+        # the banded files hold orders' own columns: declare the source
+        # schema rather than infer it (a footer-reading job on every call)
+        pruned = spark.read.schema(source_schema(spark, "orders", sf_dir)).parquet(*files)
         if t is not None:
             pruned = pruned.filter(F.col("o_totalprice") >= F.lit(t))
     return (

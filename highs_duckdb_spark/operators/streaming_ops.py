@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from highs_duckdb_spark.operators.registry import register
 from highs_duckdb_spark.session import local_rows_df
 from highs_duckdb_spark.streaming.windows import (
+    checkpoint_path,
     read_events_stream,
     run_stream_to_table,
     run_stream_with_rocksdb,
@@ -400,14 +401,10 @@ def qs08_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFram
         state["path"] = new_path
         state["ver"] += 1
 
-    import uuid as _uuid
-
     q = (
         stream.writeStream.foreachBatch(upsert)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", f"/tmp/hds_ckpt_qs08_{_uuid.uuid4().hex}"
-        )
+        .option("checkpointLocation", checkpoint_path("qs08"))
         .start()
     )
     q.awaitTermination()
@@ -700,7 +697,6 @@ def qs11_stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def qs12_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    import uuid as _uuid
 
     from pyspark.sql import Window
 
@@ -767,7 +763,7 @@ def qs12_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(merge_scd2)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/hds_ckpt_qs12_{_uuid.uuid4().hex}")
+        .option("checkpointLocation", checkpoint_path("qs12"))
         .start()
     )
     q.awaitTermination()
@@ -903,7 +899,6 @@ def qs14_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def qs15_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    import uuid as _uuid
 
     from highs_duckdb_spark.session import load_table
 
@@ -911,7 +906,7 @@ def qs15_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = "2024-01-15 00:00:00"
     src = tempfile.mkdtemp(prefix="hds_qs15_src_")
     out = tempfile.mkdtemp(prefix="hds_qs15_out_")
-    ckpt = f"/tmp/hds_qs15_ckpt_{_uuid.uuid4().hex}"
+    ckpt = checkpoint_path("qs15")
     ev.filter(F.col("ts") >= cutoff).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(src, "f1")
     )
@@ -985,7 +980,6 @@ def qs15_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def qs16_stream_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    import uuid as _uuid
 
     from highs_duckdb_spark.session import load_table
 
@@ -1010,7 +1004,7 @@ def qs16_stream_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame
     q = (
         stream.writeStream.foreachBatch(route)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/hds_ckpt_qs16_{_uuid.uuid4().hex}")
+        .option("checkpointLocation", checkpoint_path("qs16"))
         .start()
     )
     q.awaitTermination()
@@ -1261,7 +1255,7 @@ def _qs19_body(
     q = (
         stream.writeStream.foreachBatch(maintain)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/hds_ckpt_qs19_{uuid.uuid4().hex}")
+        .option("checkpointLocation", checkpoint_path("qs19"))
         .start()
     )
     q.awaitTermination()

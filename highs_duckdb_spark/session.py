@@ -13,6 +13,7 @@ import os
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,6 +29,9 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+#: generated classes kept by the session's codegen cache (see get_spark)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -56,12 +60,26 @@ def get_spark(
     users off the sockets. pyspark 4.0 does not know these confs, ignores
     them and keeps TCP.
 
+    Generated classes are cached for up to ``CODEGEN_CACHE_ENTRIES``
+    (1000) source texts (``spark.sql.codegen.cache.maxEntries``, a static
+    conf). Spark's default of 100 is smaller than one pass of the 16
+    ``olap_sf01`` queries, which needs ~195 distinct classes; an LRU
+    cycled by a recurring mix larger than itself never hits, so every
+    query recompiled its classes (Janino) and the generated code never
+    got JIT-warm. At 1000 a pass compiles nothing from its second run on:
+    a pass at sf0.1 on a 4-core host took 7.5–7.7 s at 100 entries and
+    5.9 s at 1000. The cache is keyed by the generated source, so an
+    entry can never be stale. Cost: the driver heap after
+    ``System.gc()`` went from ~105 to ~175 MB with the headline set's
+    classes cached.
+
     ``conf``: extra session-BUILD configs — the hook for core confs that
     cannot be set via spark.conf.set at runtime (e.g.
     spark.io.compression.codec for shuffle-temp-bound builds). Applied
     last, so they override the defaults above (including the two
-    ``spark.python.unix.domain.socket.*`` confs). No effect when an
-    existing session is reused (Spark builder semantics).
+    ``spark.python.unix.domain.socket.*`` confs and the codegen cache
+    size). No effect when an existing session is reused (Spark builder
+    semantics).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
@@ -96,6 +114,7 @@ def get_spark(
         # returns ~4.5M rows ≈ 1 GiB serialized once partition count rises)
         .config("spark.driver.maxResultSize", os.environ.get("SPARK_GRAFT_MAX_RESULT", "4g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     socket_dir = None
     # a reused context ignores the socket confs; a directory made for it
@@ -118,6 +137,14 @@ def get_spark(
     if socket_dir is not None:
         _remove_with_context(spark.sparkContext, socket_dir)
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM has compiled for generated code since it started:
+    one per codegen-cache miss. Local mode runs the executors in the same
+    JVM, so this counts their compiles too."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 #: pyspark names each socket ``<dir>/.<uuid4>.sock``: 43 bytes past ``dir``;
@@ -198,11 +225,15 @@ def tune_for_data(spark: SparkSession, sf_dir: str) -> int:
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(parts)
     )
     if nbytes < (100 << 20):
-        # sf0.1 parquet files are ~1-11 MB: the 128 MB default split makes
-        # every scan a single task; 2 MB splits scan row groups in parallel
-        # (measured ~12% over the headline set). Larger inputs are
-        # multi-file/row-group-rich and small splits REGRESS (empty-split
-        # no-op tasks straddling row-group boundaries) — keep the default.
+        # Small inputs: 2 MB splits let a file of several row groups scan
+        # them in parallel. A split reads the row groups whose midpoint it
+        # holds, so a single-row-group file (every sf0.1 file here, e.g.
+        # lineitem's 10.5 MB) is still one task holding all its rows, plus
+        # empty tasks for the other splits (five for lineitem). Rewriting
+        # those files into split-sized row groups was slower, not faster
+        # (ROADMAP direction 5). Larger inputs are multi-file/row-group-
+        # rich and small splits REGRESS (empty-split no-op tasks
+        # straddling row-group boundaries) — keep the default.
         spark.conf.set("spark.sql.files.maxPartitionBytes", "2m")
     # footer sidecars for the range-pruned scan paths (footers-only, no
     # data scan) so first-query paths never pay the harvest; best-effort —
@@ -368,9 +399,10 @@ def ensure_shipped(spark: SparkSession) -> None:
 
 #: reader-DataFrame cache: file listing + footer schema read cost ~100ms per
 #: spark.read.parquet call; reusing the immutable reader DataFrame avoids
-#: paying it once per query. Keyed by applicationId so entries from stopped
-#: sessions can never be served to a new one.
-_READER_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: paying it once per query. Each entry is the reader and the schema of its
+#: files as read (before normalize_events_ts). Keyed by applicationId so
+#: entries from stopped sessions can never be served to a new one.
+_READER_CACHE: dict[tuple[str, str, str], tuple[DataFrame, StructType]] = {}
 
 #: explicit layout overrides (sources/layout.py): point a logical table at a
 #: bucketed/sort-clustered catalog table instead of the raw parquet path —
@@ -425,20 +457,33 @@ def load_table(
             return override
     cached = _READER_CACHE.get(key)
     if cached is not None:
-        return cached
+        return cached[0]
     if name == "events":
         # events.parquet stores TIMESTAMP(NANOS); an externally-supplied
         # SparkSession (e.g. the driver's) won't have the legacy conf, so set
         # it here — it is a runtime-settable SQLConf.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    raw = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts is parquet TIMESTAMP(NANOS): surfaced as long nanos under
     # spark.sql.legacy.parquet.nanosAsLong — convert to a µs timestamp here so
     # every consumer sees a proper TimestampType column.
-    if name == "events":
-        df = normalize_events_ts(df)
-    _READER_CACHE[key] = df
+    df = normalize_events_ts(raw) if name == "events" else raw
+    _READER_CACHE[key] = (df, raw.schema)
     return df
+
+
+def source_schema(
+    spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR
+) -> StructType:
+    """Schema of table ``name``'s parquet files as Spark reads them, before
+    ``load_table``'s normalization (events.ts is still long nanoseconds).
+
+    A stream over the table, or a reader over some of its files, declares
+    this schema instead of inferring one: inference reads a footer in a
+    Spark job on every call, while this is served from the reader cache
+    and inferred once per session, at the table's first load."""
+    load_table(spark, name, sf_dir, use_layout=False)
+    return _READER_CACHE[(spark.sparkContext.applicationId, sf_dir, name)][1]
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -10,6 +10,8 @@ sessionizer keeps one state row per user, timing out via the watermark.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import uuid
 from collections.abc import Iterable
 
@@ -25,14 +27,16 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from highs_duckdb_spark.session import ensure_shipped
+from highs_duckdb_spark.session import ensure_shipped, source_schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table (one parquet = one micro-batch
     under AvailableNow; a directory of files would stream incrementally)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    # declared from the reader cache, not inferred: inference is a
+    # footer-reading Spark job on every call
+    batch_schema = source_schema(spark, "events", sf_dir)
     # the file source requires a directory: stream the sf dir, filtered to
     # the events file (a real deployment would point at a landing directory)
     stream = (
@@ -177,12 +181,20 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
+def checkpoint_path(tag: str) -> str:
+    """A fresh checkpoint location for one streaming query, under
+    ``tempfile.gettempdir()`` (so it follows TMPDIR)."""
+    return os.path.join(tempfile.gettempdir(), f"hds_ckpt_{tag}_{uuid.uuid4().hex}")
+
+
 def run_stream_to_table(stream_df: DataFrame, table: str, output_mode: str) -> None:
     """Execute a stream with AvailableNow into a memory sink table.
 
     Window aggregations use ``complete`` so windows still ahead of the final
     watermark are emitted (append would hold them back forever on a finite
-    source); the stateful sessionizer only supports ``append``.
+    source); the stateful sessionizer only supports ``append``. The
+    checkpoint is removed once the query has terminated: the memory sink
+    holds the result and nothing resumes from it.
     """
     spark = stream_df.sparkSession
     # State-store partition count is fixed per checkpoint at stream start
@@ -194,18 +206,22 @@ def run_stream_to_table(stream_df: DataFrame, table: str, output_mode: str) -> N
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     clamped = min(int(prev), 8)
     spark.conf.set("spark.sql.shuffle.partitions", str(clamped))
+    ckpt = checkpoint_path(table)
+    q = None
     try:
         q = (
             stream_df.writeStream.format("memory")
             .queryName(table)
             .outputMode(output_mode)
             .trigger(availableNow=True)
-            .option("checkpointLocation", f"/tmp/hds_ckpt_{table}_{uuid.uuid4().hex}")
+            .option("checkpointLocation", ckpt)
             .start()
         )
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if q is None or not q.isActive:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def dedup_stream(events: DataFrame) -> DataFrame:

@@ -228,7 +228,6 @@ def test_mv_maintenance_cycles_flat(spark, tmp_path):
     host CPU-steal windows can't flake it (measured flat: 0.91x)."""
     import os
     import time
-    import uuid as _uuid
 
     from highs_duckdb_spark.sources import layout as L
 
@@ -275,9 +274,7 @@ def test_mv_maintenance_cycles_flat(spark, tmp_path):
     q = (
         stream.writeStream.foreachBatch(maintain)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", f"/tmp/hds_ckpt_flat_{_uuid.uuid4().hex}"
-        )
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
         .start()
     )
     q.awaitTermination()
