@@ -67,29 +67,36 @@ CORPUS_HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        sf = None  # directory not named sf<N>; cosmetic field only
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    run_all = "--all" in sys.argv
-    compare = "--compare" in sys.argv
-    layout = next(
-        (a.split("=", 1)[1] for a in sys.argv if a.startswith("--layout=")),
-        os.environ.get("SPARK_GRAFT_LAYOUT", ""),
-    )
+def present_tables(sf_dir: str) -> list[str]:
+    """Registry tables present in sf_dir: a corpus dir (tools/gen_corpus.py)
+    holds documents/embeddings only — warm-up, the banded layout, and the
+    oracle views must not touch the others there."""
+    from highs_duckdb_spark.session import TABLES
 
+    return [t for t in TABLES if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))]
+
+
+def prepare_session(app: str, sf_dir: str, cpus: int, layout: str = ""):
+    """The bench session, set up and warmed outside every measured window.
+
+    Returns ``(spark, layout_paths)``; ``layout_paths`` maps each table of
+    the bucketed layout to its files (empty unless ``layout="bucketed"``).
+    The tools that time or explain queries call this too, so their figures
+    and plans are the bench's.
+    """
     # The bench session churns ~50 plans with broadcasts and python stages;
     # a larger heap keeps full GCs out of the measured window (the library
     # default stays at 8g — this is bench-process config, not engine config).
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
-    from highs_duckdb_spark.operators import QUERIES
-    from highs_duckdb_spark.session import get_spark
+    from highs_duckdb_spark.session import (
+        ensure_shipped,
+        get_spark,
+        load_table,
+        tune_for_data,
+    )
 
-    spark = get_spark("highs_duckdb_spark-bench", cpus=cpus)
+    spark = get_spark(app, cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     # Latency mode for the benchmark scale: at sf0.1 every headline query
@@ -111,8 +118,6 @@ def main() -> None:
     # that used to live here as a bench-side override; VERDICT r04 item 3
     # moved it into the library). The bench adds no partition numbers of
     # its own.
-    from highs_duckdb_spark.session import tune_for_data
-
     tune_for_data(spark, sf_dir)
 
     # Optional runtime SQLConf overrides for experiments, e.g.
@@ -131,14 +136,7 @@ def main() -> None:
     elif layout:
         raise SystemExit(f"unknown --layout={layout!r} (expected 'bucketed')")
 
-    # Tables actually present in sf_dir: a corpus dir (tools/gen_corpus.py)
-    # holds documents/embeddings only — warm-up, the banded layout, and the
-    # oracle views must not touch the others there.
-    from highs_duckdb_spark.session import TABLES as _ALL_TABLES
-
-    present = [
-        t for t in _ALL_TABLES if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-    ]
+    present = present_tables(sf_dir)
 
     # Explicit layout step for the zone-map top-k (q42_topk_banded is
     # READ-ONLY and falls back to the plain plan without this): build the
@@ -148,28 +146,12 @@ def main() -> None:
 
         build_banded_orders(spark, sf_dir)
 
-    subset = next(
-        (a.split("=", 1)[1] for a in sys.argv if a.startswith("--queries=")), None
-    )
-    named_set = next(
-        (a.split("=", 1)[1] for a in sys.argv if a.startswith("--set=")), None
-    )
-    if subset:  # explicit subset (e.g. the sf100 ladder protocol)
-        names = [n for n in subset.split(",") if n in QUERIES]
-    elif named_set == "corpus":
-        names = [n for n in CORPUS_HEADLINE if n in QUERIES]
-    elif named_set:
-        raise SystemExit(f"unknown --set={named_set!r} (expected 'corpus')")
-    else:
-        names = sorted(QUERIES) if run_all else [n for n in HEADLINE if n in QUERIES]
-
     # Warm the JVM/session and the Python-worker pool so measured queries see
     # steady-state (worker processes are shared and reused across queries).
     # Warm-up must NOT be a measured headline query (it would get an extra
     # run and bias its best-of-2 timing vs peers): scan the two big tables
     # through a trivial shuffle instead.
-    from highs_duckdb_spark.session import load_table
-
+    #
     # Touch every PRESENT table once: populates the reader-DataFrame cache
     # (file listing + footer schema) and the OS page cache, so no measured
     # query pays first-load costs that are session setup, not query work.
@@ -211,29 +193,77 @@ def main() -> None:
     # concurrent task and then reused): one task per core so no measured
     # pandas-UDF stage pays worker spawn + interpreter import. Also import
     # the shipped package inside each worker once.
-    from highs_duckdb_spark.session import ensure_shipped
-
     ensure_shipped(spark)
 
+    # nested so it pickles by value: executors cannot import this script
     def _warm_import(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import highs_duckdb_spark.optim.simplex  # noqa: F401
         return pdf
 
     warm = spark.range(2 * cpus).repartition(cpus)
     warm.groupBy("id").applyInPandas(_warm_import, "id long").collect()
+    return spark, layout_paths
+
+
+def materialize(df) -> None:
+    """Fully materialize results on the driver via Spark's columnar Arrow
+    path. `.collect()` adds a per-row Py4J pickle/decode pass that is
+    client-serialization overhead, not query execution — measured +0.19s
+    on a 45k-row result at sf0.1. The DuckDB comparison uses its own Arrow
+    fetch for the same reason (symmetric endpoints)."""
+    try:
+        df.toArrow()
+    except Exception:
+        df.collect()  # rare types the Arrow bridge can't express
+
+
+def time_runs(fn, n: int) -> list[float]:
+    """Wall seconds of ``n`` back-to-back calls of ``fn``; the protocol's
+    figure is their min (best-of-N)."""
+    runs: list[float] = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        fn()
+        runs.append(time.perf_counter() - t0)
+    return runs
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    try:
+        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        sf = None  # directory not named sf<N>; cosmetic field only
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    run_all = "--all" in sys.argv
+    compare = "--compare" in sys.argv
+    layout = next(
+        (a.split("=", 1)[1] for a in sys.argv if a.startswith("--layout=")),
+        os.environ.get("SPARK_GRAFT_LAYOUT", ""),
+    )
+
+    from highs_duckdb_spark.operators import QUERIES
+
+    spark, layout_paths = prepare_session(
+        "highs_duckdb_spark-bench", sf_dir, cpus, layout
+    )
+
+    subset = next(
+        (a.split("=", 1)[1] for a in sys.argv if a.startswith("--queries=")), None
+    )
+    named_set = next(
+        (a.split("=", 1)[1] for a in sys.argv if a.startswith("--set=")), None
+    )
+    if subset:  # explicit subset (e.g. the sf100 ladder protocol)
+        names = [n for n in subset.split(",") if n in QUERIES]
+    elif named_set == "corpus":
+        names = [n for n in CORPUS_HEADLINE if n in QUERIES]
+    elif named_set:
+        raise SystemExit(f"unknown --set={named_set!r} (expected 'corpus')")
+    else:
+        names = sorted(QUERIES) if run_all else [n for n in HEADLINE if n in QUERIES]
 
     debug = os.environ.get("SPARK_GRAFT_BENCH_DEBUG", "") == "1"
-
-    def materialize(df) -> None:
-        # Fully materialize results on the driver via Spark's columnar Arrow
-        # path. `.collect()` adds a per-row Py4J pickle/decode pass that is
-        # client-serialization overhead, not query execution — measured
-        # +0.19s on a 45k-row result at sf0.1. The DuckDB comparison uses
-        # its own Arrow fetch for the same reason (symmetric endpoints).
-        try:
-            df.toArrow()
-        except Exception:
-            df.collect()  # rare types the Arrow bridge can't express
 
     # Set-level steady state: one untimed sweep of the whole set before any
     # measurement. The JVM JIT compiles shared operator internals (shuffle
@@ -253,18 +283,16 @@ def main() -> None:
     for name in names:
         spec = QUERIES[name]
         # One untimed steady-state pass per query (EVERY query, so no query
-        # is advantaged), then best-of-3 timed: codegen/JIT compilation of
+        # is advantaged), then best-of-5 timed: codegen/JIT compilation of
         # each query's unique operator pipeline is session setup, not query
         # work, and the debug per-run lists show run 3 < run 2 < run 1
         # without it. The DuckDB --compare side gets the same warm pass.
         materialize(spec.builder(spark, sf_dir))
-        runs: list[float] = []
-        for _ in range(5):  # best-of-5: host/VM CPU-steal windows of a few seconds are observed; one-off scheduling/GC noise is large vs these runtimes
-            c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            materialize(spec.builder(spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-            compiles += codegen_compiles(spark) - c0
+        c0 = codegen_compiles(spark)
+        # best-of-5: host/VM CPU-steal windows of a few seconds are observed;
+        # one-off scheduling/GC noise is large vs these runtimes
+        runs = time_runs(lambda: materialize(spec.builder(spark, sf_dir)), 5)
+        compiles += codegen_compiles(spark) - c0
         if debug:
             print(f"{name:32s} {[round(r, 3) for r in runs]}", file=sys.stderr)
         timings[name] = round(min(runs), 3)
@@ -287,7 +315,7 @@ def main() -> None:
 
         con = duckdb.connect()
         con.execute(f"SET threads={cpus}")
-        for t in present:
+        for t in present_tables(sf_dir):
             if t in layout_paths:  # same bucketed files Spark reads
                 src = f"{layout_paths[t]}/*.parquet"
             else:
@@ -302,13 +330,12 @@ def main() -> None:
             spec = QUERIES[name]
             if spec.oracle is None:
                 continue
-            con.execute(spec.oracle).fetch_arrow_table()  # same warm pass as Spark
-            best = float("inf")
-            for _ in range(5):
-                t0 = time.perf_counter()
-                con.execute(spec.oracle).fetch_arrow_table()
-                best = min(best, time.perf_counter() - t0)
-            duck[name] = round(best, 3)
+
+            def run_oracle(sql: str = spec.oracle) -> None:
+                con.execute(sql).fetch_arrow_table()
+
+            run_oracle()  # same warm pass as Spark
+            duck[name] = round(min(time_runs(run_oracle, 5)), 3)
         # queries whose DuckDB "oracle" is a closed-form answer check, not
         # equivalent work — the ratio is not an engine comparison there
         noncomparable = {

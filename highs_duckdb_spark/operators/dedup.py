@@ -255,28 +255,6 @@ _PERM_A = [2 * i + 1 for i in range(1, NUM_PERM + 1)]  # odd multipliers
 _PERM_B = [1000003 * i + 12345 for i in range(NUM_PERM)]
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """doc_id + minhash signature (NUM_PERM min-values) + shingles.
-
-    Pure JVM and hash-once: each shingle is xxhash64'd a single time, then
-    the NUM_PERM permutations are affine maps (a·h + b) mod p over the base
-    hash — 32 integer ops per shingle instead of 32 full string hashes.
-    Operands stay < 2^62 so ANSI-mode overflow checking never trips.
-    At scale this is a map-only stage over the documents scan.
-    """
-    sh = _shingled(docs, "doc_id", n=n)
-    base = F.transform(F.col("shingles"), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_P)))
-    with_base = sh.select("doc_id", "shingles", base.alias("hbase"))
-    def perm(i: int):
-        # single-arg lambda: F.transform passes the array index to 2-arg lambdas
-        return lambda h: F.pmod(F.lit(_PERM_A[i]) * h + F.lit(_PERM_B[i]), F.lit(_MERSENNE_P))
-
-    sig = F.array(
-        *[F.array_min(F.transform(F.col("hbase"), perm(i))) for i in range(NUM_PERM)]
-    )
-    return with_base.select("doc_id", "shingles", sig.alias("sig"))
-
-
 def _md5_32(s: str) -> int:
     """Engine-neutral 32-bit hash: first 8 hex chars of md5.
     Spark equivalent: conv(substr(md5(x),1,8),16,10); DuckDB:

@@ -2628,11 +2628,12 @@ def _s20_meta_join(spark, sf_dir: str, emb_prep, meta_prep):
 
     1. **layout-aware** (VERDICT r10 item 1): when id-bucketed alternate
        copies of BOTH tables are registered in the layout catalog
-       (``register_alt_copy`` — tools/s20_ab.py builds them; a deployment
-       declares them like ALT_BUCKET_SPECS), take the co-partitioned
-       shuffled-hash join OVER THOSE COPIES: exchange-free on both sides,
-       and the FASTEST arm at the 100× corpus once scoring uses the BLAS
-       kernel (0.694 s vs 0.993 s broadcast — BENCH_SCALING r10). The old
+       (``register_alt_copy`` — tools/s20_ab.py, at commit 9b68166, built
+       them; a deployment declares them like ALT_BUCKET_SPECS), take the
+       co-partitioned shuffled-hash join OVER THOSE COPIES: exchange-free
+       on both sides, and the FASTEST arm at the 100× corpus once scoring
+       uses the BLAS kernel (0.694 s vs 0.993 s broadcast — BENCH_SCALING
+       r10). The old
        gate sized only the metadata side, so it kept picking broadcast
        and the registered copies never got used.
     2. **size gate** (no copies): broadcast below cbo.BROADCAST_CAP_BYTES

@@ -15,6 +15,7 @@ from highs_duckdb_spark.session import local_rows_df
 from highs_duckdb_spark.streaming.windows import (
     checkpoint_path,
     read_events_stream,
+    run_available_now,
     run_stream_to_table,
     run_stream_with_rocksdb,
     running_totals_stream,
@@ -401,13 +402,7 @@ def qs08_stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFram
         state["path"] = new_path
         state["ver"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path("qs08"))
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream.writeStream.foreachBatch(upsert), "qs08")
     final = spark.read.parquet(state["path"])
     return final.select(
         "user_id",
@@ -760,13 +755,7 @@ def qs12_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["path"] = new_path
         state["ver"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(merge_scd2)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path("qs12"))
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream.writeStream.foreachBatch(merge_scd2), "qs12")
     return spark.read.parquet(state["path"]).orderBy(
         "user_id", "valid_from", "event_id"
     )
@@ -898,6 +887,7 @@ def qs14_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def qs15_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
+    import shutil
     import tempfile
 
     from highs_duckdb_spark.session import load_table
@@ -937,11 +927,15 @@ def qs15_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    run_once()  # on-time half: advances + commits the watermark
-    ev.filter(F.col("ts") < cutoff).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(src, "f2")
-    )
-    run_once()  # late half against the same checkpoint: all dropped
+    try:
+        run_once()  # on-time half: advances + commits the watermark
+        ev.filter(F.col("ts") < cutoff).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(src, "f2")
+        )
+        run_once()  # late half against the same checkpoint: all dropped
+    finally:
+        # both runs have terminated: nothing resumes from the checkpoint
+        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(out)
         .select(F.col("window_start").cast("timestamp").alias("window_start"), "n")
@@ -1001,13 +995,7 @@ def qs16_stream_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame
         batch_df.filter(~bad).write.mode("append").parquet(clean_dir)
         batch_df.filter(bad).write.mode("append").parquet(quar_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path("qs16"))
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream.writeStream.foreachBatch(route), "qs16")
     out = []
     for sink, path in (("clean", clean_dir), ("quarantine", quar_dir)):
         # coalesce: an empty sink (no event_id in its residue class) must
@@ -1252,13 +1240,7 @@ def _qs19_body(
             batch_df.sparkSession, live, name, {"lineitem": batch_df}, layout_dir
         )
 
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_path("qs19"))
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream.writeStream.foreachBatch(maintain), "qs19")
     mv = spark.read.parquet(os.path.join(layout_dir, name))
     out = mv.select(
         "c_nationkey", "s_nationkey", "o_year", "ship_year", "rev_c"

@@ -177,27 +177,6 @@ K_CLUSTERS = 5
 KMEANS_ROUNDS = 5
 
 
-def _assign_udf_factory(centroids):
-    """Argmin-distance assignment: one (batch × dim) @ (dim × k) matmul per
-    Arrow batch (distance via ||x||²−2x·c+||c||²; ||x||² constant per row so
-    argmin needs only −2x·c+||c||²)."""
-    import numpy as np
-    import pandas as pd
-
-    c = np.asarray(centroids, dtype=np.float64)  # k × dim
-    c_norm2 = (c * c).sum(axis=1)
-
-    def kernel(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        scores = -2.0 * (mat @ c.T) + c_norm2  # batch × k
-        return pd.Series(scores.argmin(axis=1).astype("int64"))
-
-    kernel.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(kernel, "long")
-
-
 def _kmeans_partials_factory(centroids):
     """Fused assign + per-batch partial-sum kernel: each Arrow batch yields
     at most k rows (cluster, cnt, qsum) — the map-side combine of Lloyd's.

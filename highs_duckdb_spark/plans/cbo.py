@@ -164,9 +164,7 @@ RF_BROADCAST_COST_MULT = 25.0
 #: winning range while sf0.1-class maps (~kilobytes) stay broadcast;
 #: below the measured floor we default to broadcast's simpler shape
 #: rather than extrapolate.
-COCLUSTER_MIN_BUILD_BYTES = int(
-    os.environ.get("HDS_COCLUSTER_MIN_BUILD_BYTES", str(4 << 20))
-)
+COCLUSTER_MIN_BUILD_BYTES = 4 << 20
 #: charged bytes per broadcast-map row (key + a couple of payload columns
 #: + HashedRelation overhead)
 COCLUSTER_ROW_BYTES = 48.0

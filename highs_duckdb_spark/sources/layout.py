@@ -973,9 +973,10 @@ def register_alt_copy(
     """Record an already-built bucketed catalog table as an ALTERNATE
     clustered copy of ``table`` for this (session, sf_dir) — the
     deployment-facing registration a production catalog performs when a
-    projection/clustered copy is created out-of-band (tools/s20_ab.py's
-    id-bucketed documents/embeddings copies use it; ``attach_bucketed``
-    registers its ALT_BUCKET_SPECS builds through the same map).
+    projection/clustered copy is created out-of-band (the id-bucketed
+    documents/embeddings copies of tools/s20_ab.py, at commit 9b68166,
+    used it; ``attach_bucketed`` registers its ALT_BUCKET_SPECS builds
+    through the same map).
 
     Registration is metadata only: planners that consult
     ``alt_clustered_copies`` (cbo's copy selection, s20's filtered-ANN

@@ -18,6 +18,7 @@ from collections.abc import Iterable
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -206,20 +207,31 @@ def run_stream_to_table(stream_df: DataFrame, table: str, output_mode: str) -> N
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     clamped = min(int(prev), 8)
     spark.conf.set("spark.sql.shuffle.partitions", str(clamped))
-    ckpt = checkpoint_path(table)
+    try:
+        run_available_now(
+            stream_df.writeStream.format("memory")
+            .queryName(table)
+            .outputMode(output_mode),
+            table,
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def run_available_now(writer: DataStreamWriter, tag: str) -> None:
+    """Run ``writer`` with Trigger.AvailableNow on a fresh checkpoint and
+    wait for it to finish. The checkpoint is removed once the query has
+    terminated: the run is synchronous and nothing resumes from it."""
+    ckpt = checkpoint_path(tag)
     q = None
     try:
         q = (
-            stream_df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
+            writer.trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
             .start()
         )
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if q is None or not q.isActive:
             shutil.rmtree(ckpt, ignore_errors=True)
 

@@ -1,7 +1,7 @@
 """Work a recurring query mix should not repeat: generated classes are
 compiled once per session, builders read schemas the session already
-holds instead of starting a Spark job, and a stream run into a memory
-table leaves no checkpoint behind."""
+holds instead of starting a Spark job, and a streaming builder leaves no
+checkpoint behind."""
 
 from __future__ import annotations
 
@@ -87,13 +87,20 @@ def test_banded_and_stream_schemas_match_inferred(spark):
     assert source_schema(spark, "orders", SF) == spark.read.parquet(*files).schema
 
 
-def test_stream_to_table_leaves_no_checkpoint(spark):
-    roots = {tempfile.gettempdir(), "/tmp"}
-
-    def checkpoints() -> set[str]:
-        return {p for r in roots for p in glob.glob(os.path.join(r, "hds_ckpt_*"))}
-
-    before = checkpoints()
-    got = QUERIES["qs01_stream_tumbling"].builder(spark, SF).count()
-    assert got > 0
-    assert checkpoints() - before == set()
+@pytest.mark.parametrize(
+    "name",
+    [
+        "qs01_stream_tumbling",
+        "qs08_stream_foreachbatch_merge",
+        "qs12_stream_scd2",
+        "qs15_stream_late_data_drop",
+        "qs16_stream_dead_letter_split",
+        "qs19_stream_mv_maintenance",
+    ],
+)
+def test_streaming_builders_leave_no_checkpoint(spark, tmp_path, monkeypatch, name):
+    """A stream run into a memory table, and the builders that await their
+    own AvailableNow query, remove its checkpoint once it has terminated."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES[name].builder(spark, SF).count() > 0
+    assert glob.glob(os.path.join(str(tmp_path), "hds_ckpt_*")) == []

@@ -3,9 +3,9 @@
 
 Usage: python tools/capture_plans.py <tag> <suffix> [q1,q2,...]
 
-Defaults to the bench HEADLINE set. Runs under the same session confs as
-bench.py (latency mode + tune_for_data) so the captured plans are the plans
-the graded bench executes.
+Defaults to the bench HEADLINE set. Runs on bench.py's session
+(``bench.prepare_session``), so the captured plans are the plans the bench
+executes.
 
 SPARK_GRAFT_PLANS_NO_CKPT=1 no-ops DataFrame.localCheckpoint during capture
 so that plans hidden behind an eager checkpoint (the dedup gram/signature
@@ -24,19 +24,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE, prepare_session  # noqa: E402
+
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r11"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    from bench import HEADLINE
-
     names = sys.argv[3].split(",") if len(sys.argv) > 3 else list(HEADLINE)
 
     from highs_duckdb_spark.operators import QUERIES
-    from highs_duckdb_spark.session import get_spark, tune_for_data
 
     def _df_classes():
         from pyspark.sql import DataFrame
@@ -55,17 +53,9 @@ def main() -> None:
             cls.localCheckpoint = lambda self, eager=True: self  # type: ignore[assignment]
         suffix += "_nockpt"
 
-    spark = get_spark(
-        "capture-plans", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark, _ = prepare_session(
+        "capture-plans", sf_dir, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    tune_for_data(spark, sf_dir)
-    if os.path.exists(os.path.join(sf_dir, "orders.parquet")):
-        from highs_duckdb_spark.sources.layout import build_banded_orders
-
-        build_banded_orders(spark, sf_dir)
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag

@@ -32,9 +32,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import materialize, prepare_session, time_runs  # noqa: E402
 
 PROBES = [
     "s01_cosine_topk",
@@ -50,39 +51,23 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 7
     probes = sys.argv[3].split(",") if len(sys.argv) > 3 else PROBES
 
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
     from highs_duckdb_spark.operators import QUERIES
-    from highs_duckdb_spark.session import get_spark, load_table, tune_for_data
-    from highs_duckdb_spark.session import TABLES
 
-    spark = get_spark("floor-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    spark.sparkContext.setLogLevel("ERROR")
-    # same latency-mode confs as bench.py so the floors are comparable
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    tune_for_data(spark, sf_dir)
-    for t in TABLES:
-        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
-            load_table(spark, t, sf_dir).groupBy().count().collect()
-
-    def mat(df) -> None:
-        try:
-            df.toArrow()
-        except Exception:
-            df.collect()
+    # bench.py's session, so the floors are the bench's
+    spark, _ = prepare_session(
+        "floor-probe", sf_dir, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    )
 
     for name in probes:
         spec = QUERIES[name]
-        mat(spec.builder(spark, sf_dir))  # steady state
-        t_construct = min(
-            _timed(lambda: spec.builder(spark, sf_dir)) for _ in range(runs)
-        )
+        materialize(spec.builder(spark, sf_dir))  # steady state
+        t_construct = min(time_runs(lambda: spec.builder(spark, sf_dir), runs))
         t_fresh = min(
-            _timed(lambda: mat(spec.builder(spark, sf_dir))) for _ in range(runs)
+            time_runs(lambda: materialize(spec.builder(spark, sf_dir)), runs)
         )
         df = spec.builder(spark, sf_dir)
-        mat(df)
-        t_reuse = min(_timed(lambda: mat(df)) for _ in range(runs))
+        materialize(df)
+        t_reuse = min(time_runs(lambda: materialize(df), runs))
         print(
             f"{name:28s} construct={t_construct * 1e3:7.1f}ms "
             f"fresh={t_fresh * 1e3:7.1f}ms reuse={t_reuse * 1e3:7.1f}ms "
@@ -90,12 +75,6 @@ def main() -> None:
             flush=True,
         )
     spark.stop()
-
-
-def _timed(fn) -> float:
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
 
 
 if __name__ == "__main__":

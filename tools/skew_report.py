@@ -1,45 +1,33 @@
 #!/usr/bin/env python
-"""Skew + throughput report for the LLM-pipeline hot path at a scaled
-corpus (VERDICT r04 item 7). Two measurements over a corpus dir produced
-by tools/gen_corpus.py (distribution-preserving, duplicate-free scaling):
+"""Bucket-skew audit for the LLM-pipeline hot path at a scaled corpus
+(VERDICT r04 item 7), over a corpus dir produced by tools/gen_corpus.py
+(distribution-preserving, duplicate-free scaling): the d03 MinHash-LSH
+bucket distribution on the FULL documents table — max bucket size, total
+candidate pairs, pairs per doc, and the largest single bucket's share of
+all candidate pairs (the verdict's bound: no bucket > ~5% of pairs — a hot
+bucket would serialize the candidate join at cluster scale).
 
-1. d03 MinHash-LSH bucket distribution on the FULL documents table:
-   max bucket size, total candidate pairs, pairs per doc, and the largest
-   single bucket's share of all candidate pairs (the verdict's bound:
-   no bucket > ~5% of pairs — a hot bucket would serialize the candidate
-   join at cluster scale).
-2. Wall time of the pipeline headliners (d03_full, s01, s02, s04) on the
-   scaled corpus, Spark vs the same queries' DuckDB oracles on identical
-   files (best of N runs per engine, same min-protocol as bench.py).
+Usage: python tools/skew_report.py CORPUS_DIR
 
-Usage: python tools/skew_report.py CORPUS_DIR [runs]
-The corpus dir only needs the tables the benched queries read
-(documents/embeddings); views are registered for whichever registry
-tables exist in the dir.
+The same corpus's Spark-vs-DuckDB timings come from bench.py's protocol:
+  SPARK_GRAFT_SF_DIR=CORPUS_DIR python bench.py --compare \
+    --queries=d03_full_minhash_lsh_pairs,s01_cosine_topk,s02_ann_lsh_topk,s04_ann_ivf_topk
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 import pyspark.sql.functions as F
-
-BENCH = ["d03_full_minhash_lsh_pairs", "s01_cosine_topk", "s02_ann_lsh_topk",
-         "s04_ann_ivf_topk"]
 
 
 def main() -> None:
     corpus = os.path.abspath(sys.argv[1])
-    runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    from highs_duckdb_spark.operators import QUERIES
     from highs_duckdb_spark.operators.dedup import (
         _minhash_buckets_udf_factory,
         _shingles,
@@ -50,7 +38,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tune_for_data(spark, corpus)
 
-    # --- 1. bucket-skew distribution on the full scaled corpus ------------
     docs = load_table(spark, "documents", corpus)
     n_docs = docs.count()
     udf = _minhash_buckets_udf_factory()
@@ -73,50 +60,6 @@ def main() -> None:
         f"max_bucket_pair_share={share:.2f}%",
         flush=True,
     )
-
-    # --- 2. throughput: spark vs duckdb-oracle on identical files ---------
-    from highs_duckdb_spark.session import TABLES
-
-    for name in BENCH:
-        spec = QUERIES[name]
-        best_s = min(_time_spark(spec.builder, spark, corpus) for _ in range(runs))
-        best_d = min(_time_duck(spec.oracle, corpus) for _ in range(runs))
-        print(
-            f"BENCH {name} spark={best_s:.3f}s duckdb={best_d:.3f}s "
-            f"ratio={best_s / best_d:.2f}x",
-            flush=True,
-        )
-
-
-def _time_spark(builder, spark, sf_dir: str) -> float:
-    t0 = time.monotonic()
-    n = builder(spark, sf_dir).count()
-    dt = time.monotonic() - t0
-    print(f"  spark rows={n} {dt:.3f}s", flush=True)
-    return dt
-
-
-def _time_duck(sql: str, sf_dir: str) -> float:
-    from highs_duckdb_spark.session import TABLES
-
-    con = duckdb.connect()
-    con.execute(f"SET threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-    # only register views for tables present in the corpus dir: read_parquet
-    # binds at CREATE VIEW, so a view over an absent file hard-fails even
-    # though the benched queries read only documents/embeddings (ADVICE r05)
-    for t in TABLES:
-        if not os.path.exists(f"{sf_dir}/{t}.parquet"):
-            continue
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet"
-            f"{'/*.parquet' if os.path.isdir(f'{sf_dir}/{t}.parquet') else ''}')"
-        )
-    t0 = time.monotonic()
-    n = len(con.execute(sql).fetchall())
-    dt = time.monotonic() - t0
-    print(f"  duckdb rows={n} {dt:.3f}s", flush=True)
-    con.close()
-    return dt
 
 
 if __name__ == "__main__":
